@@ -20,9 +20,12 @@ replace on a real deployment; the logic is isolated in :meth:`upsert`.
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import inspect
 import json
 import os
+import tempfile
+import uuid
 import warnings
 from dataclasses import dataclass
 
@@ -293,6 +296,14 @@ class Catalog:
         os.makedirs(root, exist_ok=True)
         self._catalog_path = os.path.join(root, "_catalog.json")
         self._lock_path = os.path.join(root, "_catalog.lock")
+        # resolved ANN layout relations, at most one per index path:
+        # {index_path: (generation, DataFrame)}. Reusing the relation
+        # reuses its file listing, so a search skips re-listing every
+        # cell directory; see VectorCollection._masked_layout_df
+        self._layouts: dict[str, tuple[str, DataFrame]] = {}
+        # salts the tokens this handle derives for segment commits, so
+        # two handles committing the same segment never share one
+        self._handle_id = uuid.uuid4().hex
 
     @contextlib.contextmanager
     def _lock(self):
@@ -327,6 +338,51 @@ class Catalog:
         with open(tmp, "w") as f:
             json.dump(cat, f, indent=2, sort_keys=True)
         os.replace(tmp, self._catalog_path)
+
+    # -- ANN index metas and their cached layouts -------------------------
+    def _write_index_meta(
+        self, index_path: str, meta: dict, retry_key: str | None = None
+    ) -> None:
+        """Atomically (temp file + os.replace) write an index's
+        ``_index_meta.json``, stamping a fresh ``generation`` token — the
+        only place a token is minted. The token keys the cached layout
+        relation (:meth:`VectorCollection._masked_layout_df`), so it must
+        change whenever the files under ``index_path`` may have changed:
+        a rebuild at the same version writes a byte-identical meta over
+        new part files, which is why the token is never derived from the
+        meta's content.
+
+        ``retry_key`` names a commit that a crash-retry repeats (a
+        refresh passes the parent token and its segment): a retry from
+        the same parent meta re-mints the token of the attempt it
+        replaces, whose meta never became visible. The handle id salts
+        it, so a commit through another handle still reads as new. Any
+        write drops this handle's cached layout of the index."""
+        if retry_key is None:
+            token = uuid.uuid4().hex
+        else:
+            token = hashlib.sha256(
+                f"{self._handle_id}/{retry_key}".encode()
+            ).hexdigest()[:32]
+        meta["generation"] = token
+        self._layouts.pop(index_path, None)
+        # "_"-prefixed: Spark's file listing skips it, like the meta
+        fd, tmp = tempfile.mkstemp(
+            dir=index_path, prefix="_index_meta.", suffix=".tmp"
+        )
+        try:
+            with os.fdopen(fd, "w") as fh:
+                json.dump(meta, fh)
+            os.replace(tmp, os.path.join(index_path, "_index_meta.json"))
+        except BaseException:
+            with contextlib.suppress(OSError):
+                os.remove(tmp)
+            raise
+
+    def _evict_layouts(self, collection_path: str) -> None:
+        """Release the cached layouts of every index of a collection."""
+        for kind in VectorCollection._INDEX_ROUTE_PRIORITY:
+            self._layouts.pop(f"{collection_path}__{kind}", None)
 
     # -- DDL (SURVEY A1/A2) ------------------------------------------------
     def collection_exists(self, name: str) -> bool:
@@ -407,6 +463,7 @@ class Catalog:
             for a in [a for a, tgt in aliases.items() if tgt == name]:
                 del aliases[a]  # no dangling aliases (Qdrant drops them too)
             self._save(cat)
+        self._evict_layouts(os.path.join(self.root, name))
 
     def list_collections(self) -> list[str]:
         return sorted(self._collections(self._load()))
@@ -1080,7 +1137,7 @@ class VectorCollection:
         from vector_database_spark.operators.dedup import norm_side
 
         layout = norm_side(
-            self._lsh_layout_df(),
+            self._lsh_layout_df(meta),
             "id",
             "embedding",
             "corpus_id",
@@ -2028,6 +2085,7 @@ class VectorCollection:
                     self._ivf_mask_path,
                 ):
                     shutil.rmtree(idx_path, ignore_errors=True)
+                self.catalog._evict_layouts(self.path)
             else:
                 # range-repartition on (partition cols, id) so the folded
                 # layout is ~one file per (bucket, id-range) instead of
@@ -2280,26 +2338,25 @@ class VectorCollection:
         build_rows = int(
             self.catalog.spark.read.parquet(self._nsw_index_path).count()
         )
-        with open(os.path.join(self._nsw_index_path, "_index_meta.json"), "w") as fh:
-            json.dump(
-                {
-                    "built_at_version": current_version,
-                    "covers_version": current_version,
-                    "next_seg": 1,
-                    # caller args, so optimize() rebuilds the same point
-                    "build_params": {
-                        "n_buckets": n_buckets,
-                        "M": M,
-                        "ef_construction": ef_construction,
-                    },
-                    # sizes the delta-fraction escalation
-                    # (_nsw_delta_exceeded): graph quality decays as
-                    # masked-out base nodes and small delta graphs
-                    # accumulate, so optimize() retrains past the ratio
-                    "build_rows": build_rows,
+        self.catalog._write_index_meta(
+            self._nsw_index_path,
+            {
+                "built_at_version": current_version,
+                "covers_version": current_version,
+                "next_seg": 1,
+                # caller args, so optimize() rebuilds the same point
+                "build_params": {
+                    "n_buckets": n_buckets,
+                    "M": M,
+                    "ef_construction": ef_construction,
                 },
-                fh,
-            )
+                # sizes the delta-fraction escalation
+                # (_nsw_delta_exceeded): graph quality decays as
+                # masked-out base nodes and small delta graphs
+                # accumulate, so optimize() retrains past the ratio
+                "build_rows": build_rows,
+            },
+        )
 
     def search_nsw(
         self, query_vector: list[float], limit: int = 5, ef: int | None = None
@@ -2316,9 +2373,9 @@ class VectorCollection:
         equals exact search (asserted in tests/test_catalog.py)."""
         from vector_database_spark.operators import ann
 
-        self._nsw_meta_fresh("search_nsw")
+        meta = self._nsw_meta_fresh("search_nsw")
         return ann.nsw_search_layout(
-            self._nsw_layout_df(),
+            self._nsw_layout_df(meta),
             [(0, [float(x) for x in query_vector])],
             k=limit,
             ef=ef,
@@ -2330,8 +2387,10 @@ class VectorCollection:
     def _nsw_mask_path(self) -> str:
         return self.path + "__nsw_mask"
 
-    def _nsw_layout_df(self) -> DataFrame:
-        return self._masked_layout_df(self._nsw_index_path, self._nsw_mask_path)
+    def _nsw_layout_df(self, meta: dict | None = None) -> DataFrame:
+        return self._masked_layout_df(
+            self._nsw_index_path, self._nsw_mask_path, meta
+        )
 
     def _nsw_meta_fresh(self, op: str) -> dict:
         """Load the NSW index meta and enforce the coverage contract:
@@ -2472,23 +2531,20 @@ class VectorCollection:
         os.rename(staging, self._nsw_index_path)
         _shutil.rmtree(self._nsw_mask_path, ignore_errors=True)
         current_version = self.catalog._load()[self.info.name]["version"]
-        with open(
-            os.path.join(self._nsw_index_path, "_index_meta.json"), "w"
-        ) as fh:
-            json.dump(
-                {
-                    "built_at_version": meta.get(
-                        "built_at_version", current_version
-                    ),
-                    "covers_version": current_version,
-                    "next_seg": 1,
-                    # the CALLER's build intent is preserved — a later
-                    # width-based rebuild still re-derives auto points
-                    "build_params": bp,
-                    "build_rows": rows,
-                },
-                fh,
-            )
+        self.catalog._write_index_meta(
+            self._nsw_index_path,
+            {
+                "built_at_version": meta.get(
+                    "built_at_version", current_version
+                ),
+                "covers_version": current_version,
+                "next_seg": 1,
+                # the CALLER's build intent is preserved — a later
+                # width-based rebuild still re-derives auto points
+                "build_params": bp,
+                "build_rows": rows,
+            },
+        )
         return rows
 
     # -- IVF index (coarse quantization, nprobe = partition pruning) --------
@@ -2547,24 +2603,23 @@ class VectorCollection:
             .agg(F.avg("d"), F.count(F.lit(1)))
             .first()
         )
-        with open(os.path.join(self._ivf_index_path, "_index_meta.json"), "w") as fh:
-            json.dump(
-                {
-                    "built_at_version": current_version,
-                    # highest collection version this index correctly
-                    # serves; refresh advances it without a rebuild
-                    "covers_version": current_version,
-                    "next_seg": 1,
-                    "build_params": {"n_centroids": n_centroids},
-                    "centroids": [[float(x) for x in c] for c in centroids],
-                    # drift baseline; refresh_stats accumulates the same
-                    # statistic per refresh segment (see _ivf_drift_ratio)
-                    "build_mean_assign_dist": float(build_mean),
-                    # sizes the escalation's volume floor (_ivf_drift_volume_ok)
-                    "build_rows": int(build_rows),
-                },
-                fh,
-            )
+        self.catalog._write_index_meta(
+            self._ivf_index_path,
+            {
+                "built_at_version": current_version,
+                # highest collection version this index correctly
+                # serves; refresh advances it without a rebuild
+                "covers_version": current_version,
+                "next_seg": 1,
+                "build_params": {"n_centroids": n_centroids},
+                "centroids": [[float(x) for x in c] for c in centroids],
+                # drift baseline; refresh_stats accumulates the same
+                # statistic per refresh segment (see _ivf_drift_ratio)
+                "build_mean_assign_dist": float(build_mean),
+                # sizes the escalation's volume floor (_ivf_drift_volume_ok)
+                "build_rows": int(build_rows),
+            },
+        )
 
     @property
     def _ivf_mask_path(self) -> str:
@@ -2771,8 +2826,11 @@ class VectorCollection:
             if mean_dist is not None:
                 stat["mean_assign_dist"] = float(mean_dist)
             meta.setdefault("refresh_stats", []).append(stat)
-            with open(meta_path, "w") as fh:
-                json.dump(meta, fh)
+            self.catalog._write_index_meta(
+                index_path,
+                meta,
+                retry_key=f"{meta.get('generation')}/seg{seg}",
+            )
             return n_delta
         finally:
             # delta first: its plan may lean on live's checkpoint, but the
@@ -2850,16 +2908,37 @@ class VectorCollection:
             )
         return rows.select("id", "embedding", "payload")
 
-    def _masked_layout_df(self, index_path: str, mask_path: str) -> DataFrame:
+    def _masked_layout_df(
+        self, index_path: str, mask_path: str, meta: dict | None = None
+    ) -> DataFrame:
         """A segment-stamped index layout with refresh segments RESOLVED:
         superseded rows (older __seg of a rewritten id, any row of a
         deleted id) drop via the side mask — size-gated broadcast, same
-        byte budget as the tombstone join. Shared by the IVF and LSH
-        layouts (one copy of the semantics — r8 review). Layouts from
+        byte budget as the tombstone join. Shared by every index family
+        (one copy of the semantics — r8 review). Layouts from
         before the segment scheme (no __seg column) read as segment 0;
         NULL __seg coalesces to 0 as defense in depth against mixed
         schemas (refresh refuses the legacy layout, so it shouldn't
-        trigger)."""
+        trigger).
+
+        Given the index ``meta`` a search just read, the relation is
+        reused for as long as the meta's ``generation`` token stands
+        (Catalog._write_index_meta re-mints it on every write): its file
+        listing, schema and mask broadcast decision are resolved once
+        per index generation instead of once per query, and partition
+        filters still prune against the cached listing. A meta without
+        a token (written before tokens existed) reads uncached."""
+        generation = (meta or {}).get("generation")
+        if generation is None:
+            return self._read_masked_layout(index_path, mask_path)
+        cached = self.catalog._layouts.get(index_path)
+        if cached is not None and cached[0] == generation:
+            return cached[1]
+        layout = self._read_masked_layout(index_path, mask_path)
+        self.catalog._layouts[index_path] = (generation, layout)
+        return layout
+
+    def _read_masked_layout(self, index_path: str, mask_path: str) -> DataFrame:
         rows = self.catalog.spark.read.parquet(index_path)
         if "__seg" not in rows.columns:
             rows = rows.withColumn("__seg", F.lit(0))
@@ -2974,8 +3053,7 @@ class VectorCollection:
                 "rows": rows,
             }
         )
-        with open(os.path.join(index_path, "_index_meta.json"), "w") as fh:
-            json.dump(meta, fh)
+        self.catalog._write_index_meta(index_path, meta)
         return rows
 
     def consolidate_ivf_index(self) -> int:
@@ -2990,8 +3068,10 @@ class VectorCollection:
         """No-retrain LSH layout compaction — see _consolidate_layout."""
         return self._consolidate_layout("lsh")
 
-    def _ivf_layout_df(self) -> DataFrame:
-        return self._masked_layout_df(self._ivf_index_path, self._ivf_mask_path)
+    def _ivf_layout_df(self, meta: dict | None = None) -> DataFrame:
+        return self._masked_layout_df(
+            self._ivf_index_path, self._ivf_mask_path, meta
+        )
 
     def search_ivf(
         self, query_vector: list[float], limit: int = 5, nprobe: int | None = None
@@ -3011,7 +3091,7 @@ class VectorCollection:
 
         meta = self._ivf_meta_fresh("search_ivf")
         return ann.ivf_knn(
-            self._ivf_layout_df(),
+            self._ivf_layout_df(meta),
             np.asarray(meta["centroids"], dtype=float),
             [float(x) for x in query_vector],
             k=limit,
@@ -3066,7 +3146,7 @@ class VectorCollection:
 
         meta = self._ivf_meta_fresh("search_ivf_batch")
         return ann.ivf_knn_batch(
-            self._ivf_layout_df(),
+            self._ivf_layout_df(meta),
             np.asarray(meta["centroids"], dtype=float),
             queries,
             k=limit,
@@ -3136,41 +3216,40 @@ class VectorCollection:
         import shutil as _shutil
 
         _shutil.rmtree(self._ivfpq_mask_path, ignore_errors=True)
-        with open(os.path.join(self._ivfpq_index_path, "_index_meta.json"), "w") as fh:
-            json.dump(
-                {
-                    "built_at_version": current_version,
-                    "covers_version": current_version,
-                    "next_seg": 1,
-                    # caller args (n_centroids=None stays None: a rebuild
-                    # at a grown collection should re-derive sqrt-N)
-                    "build_params": {
-                        "n_centroids": n_centroids,
-                        "m": m,
-                        "ksub": ksub,
-                    },
-                    "centroids": [[float(x) for x in c] for c in centroids],
-                    "codebooks": [
-                        [[float(x) for x in row] for row in book] for book in books
-                    ],
-                    # drift baseline: the stat here is PQ reconstruction
-                    # error (not centroid-assign distance), stored under
-                    # the family-generic keys so _ivf_drift_ratio /
-                    # _ivf_drift_volume_ok apply unchanged
-                    "drift_stat": "pq_recon_err",
-                    "build_mean_assign_dist": build_mean,
-                    "build_rows": build_rows,
+        self.catalog._write_index_meta(
+            self._ivfpq_index_path,
+            {
+                "built_at_version": current_version,
+                "covers_version": current_version,
+                "next_seg": 1,
+                # caller args (n_centroids=None stays None: a rebuild
+                # at a grown collection should re-derive sqrt-N)
+                "build_params": {
+                    "n_centroids": n_centroids,
+                    "m": m,
+                    "ksub": ksub,
                 },
-                fh,
-            )
+                "centroids": [[float(x) for x in c] for c in centroids],
+                "codebooks": [
+                    [[float(x) for x in row] for row in book] for book in books
+                ],
+                # drift baseline: the stat here is PQ reconstruction
+                # error (not centroid-assign distance), stored under
+                # the family-generic keys so _ivf_drift_ratio /
+                # _ivf_drift_volume_ok apply unchanged
+                "drift_stat": "pq_recon_err",
+                "build_mean_assign_dist": build_mean,
+                "build_rows": build_rows,
+            },
+        )
 
     @property
     def _ivfpq_mask_path(self) -> str:
         return self.path + "__ivfpq_mask"
 
-    def _ivfpq_layout_df(self) -> DataFrame:
+    def _ivfpq_layout_df(self, meta: dict | None = None) -> DataFrame:
         return self._masked_layout_df(
-            self._ivfpq_index_path, self._ivfpq_mask_path
+            self._ivfpq_index_path, self._ivfpq_mask_path, meta
         )
 
     def _ivfpq_meta_fresh(self, op: str) -> dict:
@@ -3273,7 +3352,7 @@ class VectorCollection:
         cnorm = np.linalg.norm(centroids, axis=1) * np.linalg.norm(q)
         sims = centroids @ q / np.where(cnorm == 0, 1.0, cnorm)
         probe = [int(i) for i in np.argsort(-sims)[:nprobe]]
-        codes = self._ivfpq_layout_df()
+        codes = self._ivfpq_layout_df(meta)
         if shortlist is None:
             # scanned-code estimate from the layout's parquet footers —
             # deliberately the RAW (unmasked) count: footer metadata only,
@@ -3342,7 +3421,7 @@ class VectorCollection:
                 None, int(raw_codes * nprobe / max(len(centroids), 1))
             )
         return ann.ivfpq_knn_batch(
-            self._ivfpq_layout_df(),
+            self._ivfpq_layout_df(meta),
             centroids,
             np.asarray(meta["codebooks"], dtype=float),
             self.df().select("id", "embedding", "payload"),
@@ -3410,18 +3489,17 @@ class VectorCollection:
         import shutil as _shutil
 
         _shutil.rmtree(self._lsh_mask_path, ignore_errors=True)
-        with open(os.path.join(self._lsh_index_path, "_index_meta.json"), "w") as fh:
-            json.dump(
-                {
-                    "built_at_version": current_version,
-                    "covers_version": current_version,
-                    "next_seg": 1,
-                    "bits": bits,
-                    "tables": tables,
-                    "build_params": {"bits": bits_arg, "tables": tables},
-                },
-                fh,
-            )
+        self.catalog._write_index_meta(
+            self._lsh_index_path,
+            {
+                "built_at_version": current_version,
+                "covers_version": current_version,
+                "next_seg": 1,
+                "bits": bits,
+                "tables": tables,
+                "build_params": {"bits": bits_arg, "tables": tables},
+            },
+        )
 
     @property
     def _lsh_mask_path(self) -> str:
@@ -3469,8 +3547,10 @@ class VectorCollection:
             partition_by=("table", "sig"),
         )
 
-    def _lsh_layout_df(self) -> DataFrame:
-        return self._masked_layout_df(self._lsh_index_path, self._lsh_mask_path)
+    def _lsh_layout_df(self, meta: dict | None = None) -> DataFrame:
+        return self._masked_layout_df(
+            self._lsh_index_path, self._lsh_mask_path, meta
+        )
 
     def _lsh_meta_fresh(self, op: str) -> dict:
         """Load the LSH index meta and enforce the coverage contract (the
@@ -3512,7 +3592,7 @@ class VectorCollection:
 
         meta = self._lsh_meta_fresh("search_lsh")
         return ann.lsh_knn_pruned_df(
-            self._lsh_layout_df(),
+            self._lsh_layout_df(meta),
             [float(x) for x in query_vector],
             k=limit,
             bits=meta["bits"],
@@ -3530,10 +3610,13 @@ class VectorCollection:
 
     def index_status(self) -> dict[str, dict]:
         """Freshness of every persisted ANN index of this collection:
-        ``{kind: {"exists", "built_at_version", "fresh"}}``. An index is
-        fresh iff it COVERS the collection's current version — the pinned
-        build version, or (IVF) a later refresh_ivf_index coverage (the
-        same contract each ``search_<kind>`` enforces by raising)."""
+        ``{kind: {"exists", "built_at_version", "fresh", "layout_cached"}}``.
+        An index is fresh iff it COVERS the collection's current version —
+        the pinned build version, or (IVF) a later refresh_ivf_index
+        coverage (the same contract each ``search_<kind>`` enforces by
+        raising). ``layout_cached`` is True when this catalog handle holds
+        the index's resolved layout for the current meta generation, so
+        the next search skips the file listing."""
         current = self.catalog._load()[self.info.name]["version"]
         out: dict[str, dict] = {}
         for kind, path in (
@@ -3545,17 +3628,25 @@ class VectorCollection:
             meta_path = os.path.join(path, "_index_meta.json")
             if not os.path.exists(meta_path):
                 out[kind] = {
-                    "exists": False, "built_at_version": None, "fresh": False
+                    "exists": False,
+                    "built_at_version": None,
+                    "fresh": False,
+                    "layout_cached": False,
                 }
                 continue
             with open(meta_path) as fh:
                 meta = json.load(fh)
             built = meta["built_at_version"]
             covers = meta.get("covers_version", built)
+            cached = self.catalog._layouts.get(path)
             entry = {
                 "exists": True,
                 "built_at_version": built,
                 "fresh": covers == current,
+                # a search would reuse the resolved layout relation
+                # instead of re-listing the index's files
+                "layout_cached": cached is not None
+                and cached[0] == meta.get("generation"),
             }
             if kind in ("ivf", "ivfpq"):
                 # drift ratio of everything refreshed since the last full
@@ -3644,7 +3735,7 @@ class VectorCollection:
             from vector_database_spark.operators import ann
 
             return ann.nsw_search_layout(
-                self._nsw_layout_df(),
+                self._nsw_layout_df(self._nsw_meta_fresh("search_auto_batch")),
                 [(int(i), [float(x) for x in v]) for i, v in queries],
                 k=limit,
                 id_col="id",
@@ -3681,7 +3772,7 @@ class VectorCollection:
 
         meta = self._lsh_meta_fresh("search_lsh_batch")
         return ann.lsh_knn_batch_df(
-            self._lsh_layout_df(),
+            self._lsh_layout_df(meta),
             queries,
             k=limit,
             bits=meta["bits"],
