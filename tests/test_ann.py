@@ -94,7 +94,7 @@ def test_ivf_partitioned_layout_prunes(spark, emb, tmp_path):
     path = str(tmp_path / "ivf")
     ann.ivf_write_partitioned(assigned, path)
     qv = _query_vecs(emb, n=1)[0][1]
-    res = ann.ivf_knn_pruned(spark, path, centroids, qv, k=5, nprobe=3)
+    res = ann.ivf_knn(spark.read.parquet(path), centroids, qv, k=5, nprobe=3)
     assert res.count() == 5
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
@@ -110,7 +110,7 @@ def test_lsh_partitioned_layout_prunes_and_matches_fused(spark, emb, tmp_path):
     path = str(tmp_path / "lsh")
     ann.lsh_write_partitioned(emb, path, dim=dim)
     qv = _query_vecs(emb, n=1)[0][1]
-    pruned = ann.lsh_knn_pruned(spark, path, qv, k=5)
+    pruned = ann.lsh_knn_pruned_df(spark.read.parquet(path), qv, k=5)
     fused = ann.lsh_knn(emb, qv, k=5)
     p_rows = [(r["vec_id"], r["score"]) for r in pruned.collect()]
     f_rows = [(r["vec_id"], r["score"]) for r in fused.collect()]
@@ -517,7 +517,9 @@ def test_nsw_persisted_index_matches_fused(spark, emb, tmp_path):
     ]
     persisted = [
         (r["qid"], r["vec_id"], r["score"])
-        for r in ann.nsw_search_index(spark, path, queries, k=5).collect()
+        for r in ann.nsw_search_layout(
+            spark.read.parquet(path), queries, k=5
+        ).collect()
     ]
     assert persisted == fused
     # adjacency stored as ids with bounded degree
@@ -655,7 +657,7 @@ def test_batch_operators_empty_queries(spark, emb, tmp_path):
     ann.lsh_write_partitioned(
         emb.select("vec_id", "embedding"), lsh_path, dim=64, payload_cols=()
     )
-    out = ann.lsh_knn_batch(spark, lsh_path, [], k=5)
+    out = ann.lsh_knn_batch_df(spark.read.parquet(lsh_path), [], k=5)
     assert out.columns == ["qid", "vec_id", "score"] and out.count() == 0
 
     out = ann.nsw_knn(emb, [], k=5, payload_cols=())
@@ -699,15 +701,15 @@ def test_knn_batch_auto_float32_roundtrip_branch_identity(spark):
 
 def test_lsh_knn_batch_df_equals_persisted(spark, emb, tmp_path):
     """lsh_knn_batch_df over the in-memory long form must be row-identical
-    to lsh_knn_batch over the persisted (table, sig) layout — they are the
+    to lsh_knn_batch_df over the persisted (table, sig) layout — they are the
     same probe-union + equi-join plan over the same index rows."""
     path = str(tmp_path / "lsh_df_twin")
     ann.lsh_write_partitioned(emb, path, dim=64, payload_cols=("label",))
     queries = _query_vecs(emb, n=4)
     persisted = {
         (r["qid"], r["vec_id"], r["label"], r["score"])
-        for r in ann.lsh_knn_batch(
-            spark, path, queries, k=5, payload_cols=("label",)
+        for r in ann.lsh_knn_batch_df(
+            spark.read.parquet(path), queries, k=5, payload_cols=("label",)
         ).collect()
     }
     long_form = ann.lsh_long_form(emb, dim=64, payload_cols=("label",))

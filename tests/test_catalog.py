@@ -9,6 +9,8 @@ Known-answer tests mirroring the reference semantics:
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -248,6 +250,95 @@ def test_drop(catalog):
     catalog.create_collection("c6", dim=2)
     catalog.drop_collection("c6")
     assert not catalog.collection_exists("c6")
+
+def _on_disk(catalog, prefix):
+    return sorted(d for d in os.listdir(catalog.root) if d.startswith(prefix))
+
+
+def test_drop_deletes_points_and_every_index(catalog, spark):
+    """A collection dropped and created again under the same name is
+    empty: no points, no tombstones, no index or mask of any family."""
+    col = catalog.create_collection("dd", dim=8)
+    rows = [
+        (i, [((i * 31 + j * 17) % 19) / 10.0 - 0.9 for j in range(8)], i % 3)
+        for i in range(40)
+    ]
+    col.upsert(_points(spark, rows[:20]))
+    col.upsert(_points(spark, rows[20:]))
+    col.delete(point_ids=[0])
+    col.build_nsw_index(n_buckets=2)
+    col.build_lsh_index(bits=6, tables=2)
+    col.build_ivfpq_index(n_centroids=4, m=4, ksub=8)
+    col.build_ivf_index(n_centroids=4)
+    col.upsert(_points(spark, rows[:1]))
+    assert col.refresh_ivf_index() == 1  # an IVF mask dir too
+    assert all(st["exists"] for st in col.index_status().values())
+    # what a consolidation that crashed before its swap leaves behind
+    for kind in ("nsw", "ivf"):
+        os.makedirs(f"{catalog.root}/dd__{kind}__consolidate_stage")
+    catalog.update_aliases(create={"dd_alias": "dd"})
+
+    catalog.drop_collection("dd")
+    assert catalog.list_aliases() == {}
+    assert _on_disk(catalog, "dd") == []
+    col = catalog.create_collection("dd", dim=8)
+    assert col.count() == 0
+    assert not any(st["exists"] for st in col.index_status().values())
+
+
+def test_drop_keeps_collection_whose_name_extends_it(catalog, spark):
+    """``sb__ivf`` is where an IVF index of ``sb`` would live, but here
+    it is a collection of its own: dropping and re-creating ``sb`` must
+    leave it and its tombstones alone."""
+    sib = catalog.create_collection("sb__ivf", dim=2)
+    sib.upsert(_points(spark, [(1, [1, 0], 0), (2, [0, 1], 1)]))
+    sib.delete(point_ids=[2])
+    col = catalog.create_collection("sb", dim=2)
+    col.upsert(_points(spark, [(3, [1, 1], 0)]))
+    catalog.drop_collection("sb")
+    catalog.create_collection("sb", dim=2)
+    assert _on_disk(catalog, "sb") == ["sb__ivf", "sb__ivf__tombstones"]
+    assert [r["id"] for r in catalog.collection("sb__ivf").df().collect()] == [1]
+
+
+def test_drop_of_a_bad_or_unknown_name_deletes_nothing(catalog, spark):
+    """A name that does not denote one entry of the catalog root is
+    refused before anything is touched (``''`` would resolve to the root
+    itself, ``..`` to its parent), and dropping an unknown name leaves
+    even directories carrying that name alone."""
+    col = catalog.create_collection("keep", dim=2)
+    col.upsert(_points(spark, [(1, [1, 0], 0)]))
+    os.makedirs(os.path.join(catalog.root, "ghost"))
+    for bad in ("", ".", "..", "a/b", os.path.join(catalog.root, "keep")):
+        with pytest.raises(ValueError, match="invalid collection name"):
+            catalog.drop_collection(bad)
+        with pytest.raises(ValueError, match="invalid collection name"):
+            catalog.create_collection(bad, dim=2)
+    catalog.drop_collection("ghost")
+    assert sorted(os.listdir(catalog.root)) == [
+        "_catalog.json", "_catalog.lock", "ghost", "keep"
+    ]
+    assert catalog.list_collections() == ["keep"]
+    assert catalog.collection("keep").count() == 1
+
+
+def test_create_clears_dirs_of_an_interrupted_drop(catalog, spark):
+    """A drop that committed the catalog but died before its deletes
+    leaves the data on disk; creating the name again must not read it."""
+    col = catalog.create_collection("cr", dim=2)
+    col.upsert(_points(spark, [(1, [1, 0], 0), (2, [0, 1], 1), (3, [1, 1], 2)]))
+    col.delete(point_ids=[3])
+    col.build_ivf_index(n_centroids=2)
+    with catalog._lock():
+        cat = catalog._load()
+        del cat["cr"]
+        catalog._save(cat)
+    assert _on_disk(catalog, "cr") == ["cr", "cr__ivf", "cr__tombstones"]
+    col = catalog.create_collection("cr", dim=2)
+    assert col.count() == 0
+    assert not col.index_status()["ivf"]["exists"]
+    assert _on_disk(catalog, "cr") == []
+
 
 def test_delete_by_ids_and_resurrect(catalog, spark):
     col = catalog.create_collection("d1", dim=2)
@@ -1549,7 +1640,7 @@ def test_ivf_auto_defaults_on_collection(spark, tmp_path):
     )
     col.upsert(pts)
     col.build_ivf_index()
-    with open(_os.path.join(col._ivf_index_path, "_index_meta.json")) as fh:
+    with open(_os.path.join(col._index_path("ivf"), "_index_meta.json")) as fh:
         centroids = _json.load(fh)["centroids"]
     assert len(centroids) == max(16, int(300**0.5))  # sqrt(N) rule
     qv = [((3 * 977 + j * 131) % 1009) / 504.0 - 1.0 for j in range(8)]
@@ -1685,7 +1776,7 @@ def test_ivf_refresh_retry_does_not_duplicate(spark, tmp_path):
         )
     )
 
-    meta_path = _os.path.join(col._ivf_index_path, "_index_meta.json")
+    meta_path = _os.path.join(col._index_path("ivf"), "_index_meta.json")
     with open(meta_path) as fh:
         pre = _json.load(fh)
     assert col.refresh_ivf_index() == 20
@@ -1699,7 +1790,7 @@ def test_ivf_refresh_retry_does_not_duplicate(spark, tmp_path):
     with open(meta_path) as fh:
         assert _json.load(fh) == post
 
-    layout = spark.read.parquet(col._ivf_index_path)
+    layout = spark.read.parquet(col._index_path("ivf"))
     from pyspark.sql import functions as F
 
     assert layout.filter(F.col("__seg") == pre["next_seg"]).count() == 20
@@ -1737,7 +1828,7 @@ def test_ivf_refresh_refuses_legacy_layout(spark, tmp_path):
     )
     col.build_ivf_index(n_centroids=4)
     # devolve the meta to the pre-segment shape
-    meta_path = _os.path.join(col._ivf_index_path, "_index_meta.json")
+    meta_path = _os.path.join(col._index_path("ivf"), "_index_meta.json")
     with open(meta_path) as fh:
         meta = _json.load(fh)
     meta.pop("next_seg")
@@ -1832,7 +1923,7 @@ def test_lsh_refresh_incremental(spark, tmp_path):
 
     # crash-retry of the same segment (meta rolled back) must not
     # double-materialize rows
-    meta_path = _os.path.join(col._lsh_index_path, "_index_meta.json")
+    meta_path = _os.path.join(col._index_path("lsh"), "_index_meta.json")
     with open(meta_path) as fh:
         post = _json.load(fh)
     pre = dict(post, covers_version=post["built_at_version"], next_seg=1)
@@ -2046,17 +2137,17 @@ def test_partitioned_layouts_have_bounded_file_counts(spark, tmp_path):
     col.build_lsh_index(bits=6, tables=4)
     n_dirs = sum(
         1
-        for dp, _d, fs in _os.walk(col._lsh_index_path)
+        for dp, _d, fs in _os.walk(col._index_path("lsh"))
         if any(f.endswith(".parquet") for f in fs)
     )
-    n_files = parquet_files(col._lsh_index_path)
+    n_files = parquet_files(col._index_path("lsh"))
     assert n_files <= n_dirs + shuffle_parts, (
         f"LSH layout wrote {n_files} files over {n_dirs} partition dirs — "
         "the pre-write repartition regressed"
     )
 
     col.build_ivf_index(n_centroids=8)
-    n_files = parquet_files(col._ivf_index_path)
+    n_files = parquet_files(col._index_path("ivf"))
     assert n_files <= 8 + shuffle_parts
 
     # compact: the folded collection layout is bounded too
@@ -2180,8 +2271,8 @@ def test_empty_fold_drops_indexes_and_tombstone_only_log_folds(spark, tmp_path, 
     assert info.get("compacted_at"), "all-deleted fold never fired"
     assert col.count() == 0
     # (a) the stale indexes are GONE, search_auto degrades to exact-empty
-    assert not _os.path.exists(col._ivf_index_path)
-    assert not _os.path.exists(col._lsh_index_path)
+    assert not _os.path.exists(col._index_path("ivf"))
+    assert not _os.path.exists(col._index_path("lsh"))
     assert col.index_status()["ivf"]["exists"] is False
     assert col.route_for_search() == "exact"
     assert col.optimize() == {"compacted": False}  # no crash, nothing to do
@@ -2505,7 +2596,7 @@ def test_optimize_rebuilds_legacy_meta_at_original_params(spark, tmp_path):
     col.upsert(pts(range(30, 40)))  # stale now
 
     # rewrite the meta as a LEGACY one: top-level knobs only
-    meta_path = _os.path.join(col._lsh_index_path, "_index_meta.json")
+    meta_path = _os.path.join(col._index_path("lsh"), "_index_meta.json")
     with open(meta_path) as fh:
         meta = _json.load(fh)
     legacy = {
@@ -2845,7 +2936,7 @@ def test_lsh_width_outgrown_escalates_rebuild(spark, tmp_path, monkeypatch):
     import json as _json
     import os as _os
 
-    meta_path = _os.path.join(col._lsh_index_path, "_index_meta.json")
+    meta_path = _os.path.join(col._index_path("lsh"), "_index_meta.json")
     with open(meta_path) as fh:
         built_bits = _json.load(fh)["bits"]
 
@@ -3176,7 +3267,7 @@ def test_ivf_cells_outgrown_escalates_rebuild(spark, tmp_path, monkeypatch):
 
     col.upsert(pts(range(60)))
     col.build_ivf_index(n_centroids=None)  # auto → _auto_n_centroids(60)
-    meta_path = _os.path.join(col._ivf_index_path, "_index_meta.json")
+    meta_path = _os.path.join(col._index_path("ivf"), "_index_meta.json")
     with open(meta_path) as fh:
         built_k = len(_json.load(fh)["centroids"])
 
@@ -3565,7 +3656,7 @@ def test_multi_segment_refresh_chains(spark, tmp_path):
 
     segs = {
         r["__seg"]
-        for r in col._nsw_layout_df().select("__seg").distinct().collect()
+        for r in col._masked_layout_df("nsw").select("__seg").distinct().collect()
     }
     assert segs == {0, 1, 2}
     # consolidation folds it back to one
@@ -3683,12 +3774,12 @@ def test_nsw_consolidation_merges_segments_and_matches_rebuild(
     assert rep["nsw"] == "consolidated", rep
 
     # structurally a rebuild: one segment, base bucket range, no masks
-    layout = col._nsw_layout_df()
+    layout = col._masked_layout_df("nsw")
     assert {r["__seg"] for r in layout.select("__seg").distinct().collect()} == {0}
     assert {
         r["_b"] for r in layout.select("_b").distinct().collect()
     } <= {0, 1}
-    assert not os.path.exists(col._nsw_mask_path)
+    assert not os.path.exists(col._mask_path("nsw"))
     st = col.index_status()["nsw"]
     assert st["fresh"] and st["delta_fraction"] == 0.0
     n_live = col.df().count()
@@ -3795,10 +3886,10 @@ def test_flat_layout_mask_consolidation(spark, tmp_path):
     rep = col.optimize()
     for kind in ("ivf", "lsh", "ivfpq"):
         assert rep[kind] == "consolidated", rep
-        assert not os.path.exists(getattr(col, f"_{kind}_mask_path"))
+        assert not os.path.exists(col._mask_path(kind))
         with open(
             os.path.join(
-                getattr(col, f"_{kind}_index_path"), "_index_meta.json"
+                col._index_path(kind), "_index_meta.json"
             )
         ) as fh:
             meta = json.load(fh)
@@ -3811,9 +3902,9 @@ def test_flat_layout_mask_consolidation(spark, tmp_path):
     }
     assert after == drift_before
     # layouts hold exactly the live rows, searches stay correct
-    assert col._ivf_layout_df().count() == 100
-    assert col._ivfpq_layout_df().count() == 100
-    assert col._lsh_layout_df().count() == 200  # 2 tables x 100 live
+    assert col._masked_layout_df("ivf").count() == 100
+    assert col._masked_layout_df("ivfpq").count() == 100
+    assert col._masked_layout_df("lsh").count() == 200  # 2 tables x 100 live
     for search in (
         lambda q: col.search_ivf(q, limit=1, nprobe=4),
         lambda q: col.search_lsh(q, limit=1),
@@ -3864,7 +3955,7 @@ def test_nsw_refresh_respects_pinned_wide_bucket_layout(spark, tmp_path):
     # beyond every possible base bucket id
     seg_buckets = {
         r["_b"]
-        for r in col._nsw_layout_df()
+        for r in col._masked_layout_df("nsw")
         .filter(F.col("__seg") == 1)
         .select("_b")
         .distinct()

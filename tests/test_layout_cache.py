@@ -86,7 +86,7 @@ def test_warm_ivf_search_skips_layout_listing(spark, ivf):
 
     cat, col = ivf
     col.build_ivf_index(n_centroids=N_CELLS)  # cold: nothing cached yet
-    assert col._ivf_index_path not in cat._layouts
+    assert col._index_path("ivf") not in cat._layouts
     assert col.index_status()["ivf"]["layout_cached"] is False
     q = _vec(7, 0.01)
 
@@ -99,9 +99,9 @@ def test_warm_ivf_search_skips_layout_listing(spark, ivf):
     )
     assert warm_jobs < cold_jobs, (cold_jobs, warm_jobs)
 
-    meta = _meta(col._ivf_index_path)
+    meta = _meta(col._index_path("ivf"))
     bypassed = ann.ivf_knn(
-        col._ivf_layout_df(),  # no meta: read uncached
+        col._masked_layout_df("ivf"),  # no meta: read uncached
         np.asarray(meta["centroids"], dtype=float),
         q,
         k=5,
@@ -116,6 +116,53 @@ def test_warm_ivf_search_skips_layout_listing(spark, ivf):
     assert "centroid_id" in plan.split("PartitionFilters")[1][:200]
 
 
+def test_warm_ivfpq_search_keeps_shortlist_count(spark, ivf):
+    """search_ivfpq sizes its shortlist from the layout's raw row count,
+    which is kept next to the cached layout for its generation: a warm
+    search launches 4 jobs (8 when every search re-counted the layout),
+    and single and batch rows equal a cache-bypassed read."""
+    from vector_database_spark.operators import ann
+
+    _, col = ivf
+    col.build_ivfpq_index(n_centroids=N_CELLS, m=4, ksub=8)
+    queries = [(1, _vec(7, 0.01)), (2, _vec(11, 0.01))]
+    q = queries[0][1]
+    cold, cold_jobs = _run_in_group(
+        spark, lambda: col.search_ivfpq(q, limit=5).collect()
+    )
+    warm, warm_jobs = _run_in_group(
+        spark, lambda: col.search_ivfpq(q, limit=5).collect()
+    )
+    assert warm_jobs == 4, (cold_jobs, warm_jobs)
+    warm_batch = col.search_ivfpq_batch(queries, limit=5).collect()
+
+    meta = _meta(col._index_path("ivfpq"))
+    bypassed = ann.ivfpq_knn_batch(
+        col._masked_layout_df("ivfpq"),  # no meta: read uncached
+        np.asarray(meta["centroids"], dtype=float),
+        np.asarray(meta["codebooks"], dtype=float),
+        col.df().select("id", "embedding", "payload"),
+        queries,
+        k=5,
+        id_col="id",
+        emb_col="embedding",
+        payload_cols=("payload",),
+        rerank_metric="cosine",
+        n_codes=spark.read.parquet(col._index_path("ivfpq")).count(),
+    ).collect()
+
+    def ranked(rows, qid):
+        hits = sorted(
+            (r for r in rows if r["qid"] == qid),
+            key=lambda r: (-r["score"], r["id"]),
+        )
+        return _ids(hits)
+
+    assert _ids(warm) == _ids(cold) == ranked(bypassed, 1)
+    for qid, _ in queries:
+        assert ranked(warm_batch, qid) == ranked(bypassed, qid), qid
+
+
 def test_rebuild_at_same_version_relists(spark, ivf):
     """A rebuild at the same version with seeded KMeans writes a meta
     identical apart from its token over NEW part files. When another
@@ -124,10 +171,10 @@ def test_rebuild_at_same_version_relists(spark, ivf):
     cat, col = ivf
     q = _vec(11, 0.01)
     before = _ids(col.search_ivf(q, limit=5, nprobe=N_CELLS).collect())
-    meta_before = _meta(col._ivf_index_path)
+    meta_before = _meta(col._index_path("ivf"))
     Catalog(spark, cat.root).collection("lc").build_ivf_index(n_centroids=N_CELLS)
     assert col.index_status()["ivf"]["layout_cached"] is False
-    meta_after = _meta(col._ivf_index_path)
+    meta_after = _meta(col._index_path("ivf"))
     assert meta_after["generation"] != meta_before["generation"]
     meta_before.pop("generation")
     meta_after.pop("generation")
@@ -156,18 +203,18 @@ def test_refresh_and_consolidate_serve_new_ids(spark, ivf):
             assert got == [i], (step, i, got)
 
     def roll_back_and_refresh():
-        with open(os.path.join(col._ivf_index_path, "_index_meta.json"), "w") as fh:
+        with open(os.path.join(col._index_path("ivf"), "_index_meta.json"), "w") as fh:
             json.dump(pre, fh)  # the commit never happened
         assert col.refresh_ivf_index() == 20
-        return _meta(col._ivf_index_path)
+        return _meta(col._index_path("ivf"))
 
     col.search_ivf(_vec(1), limit=1).collect()  # cache this generation
     other = Catalog(spark, cat.root).collection("lc")
     other.upsert(_points(spark, range(N_POINTS, N_POINTS + 20), bump=0.003))
-    pre = _meta(col._ivf_index_path)
+    pre = _meta(col._index_path("ivf"))
     assert other.refresh_ivf_index() == 20
     serves_new_ids("refreshed by another handle")
-    by_other = _meta(col._ivf_index_path)
+    by_other = _meta(col._index_path("ivf"))
 
     retried = roll_back_and_refresh()
     assert retried["generation"] != by_other["generation"]
@@ -184,9 +231,9 @@ def test_legacy_meta_without_token_reads_uncached(spark, tmp_path):
     col = cat.create_collection("lg", dim=DIM)
     col.upsert(_points(spark, range(100)))
     col.build_ivf_index(n_centroids=4)
-    meta = _meta(col._ivf_index_path)
+    meta = _meta(col._index_path("ivf"))
     meta.pop("generation")
-    with open(os.path.join(col._ivf_index_path, "_index_meta.json"), "w") as fh:
+    with open(os.path.join(col._index_path("ivf"), "_index_meta.json"), "w") as fh:
         json.dump(meta, fh)
     for _ in range(2):
         got = [r["id"] for r in col.search_ivf(_vec(5), limit=1, nprobe=4).collect()]
@@ -205,8 +252,8 @@ def test_repeated_build_search_cycles_hold_one_entry(spark, tmp_path):
     for _ in range(10):
         col.build_ivf_index(n_centroids=4)
         col.search_ivf(_vec(3), limit=1).collect()
-    assert list(cat._layouts) == [col._ivf_index_path]
-    assert cat._layouts[col._ivf_index_path][0] == _meta(col._ivf_index_path)["generation"]
+    assert list(cat._layouts) == [col._index_path("ivf")]
+    assert cat._layouts[col._index_path("ivf")][0] == _meta(col._index_path("ivf"))["generation"]
 
     cat.drop_collection("cy")
     assert cat._layouts == {}
@@ -215,11 +262,11 @@ def test_repeated_build_search_cycles_hold_one_entry(spark, tmp_path):
     col.upsert(_points(spark, range(30)))
     col.build_ivf_index(n_centroids=4)
     col.search_ivf(_vec(3), limit=1).collect()
-    assert list(cat._layouts) == [col._ivf_index_path]
+    assert list(cat._layouts) == [col._index_path("ivf")]
     col.delete(point_ids=list(range(30)))
     assert col.compact() is True
     assert cat._layouts == {}
-    assert not os.path.exists(col._ivf_index_path)
+    assert not os.path.exists(col._index_path("ivf"))
 
 
 def test_lsh_layout_reused_across_searches(spark, tmp_path):
@@ -242,7 +289,7 @@ def test_lsh_layout_reused_across_searches(spark, tmp_path):
         )
         assert warm_jobs < cold_jobs, (rebuilt_by, cold_jobs, warm_jobs)
         bypassed = ann.lsh_knn_pruned_df(
-            col._lsh_layout_df(),
+            col._masked_layout_df("lsh"),
             q,
             k=5,
             bits=6,

@@ -7,7 +7,7 @@ its own probe cells) vs (b) ONE ivf_knn_batch scan of the union of all
 probe cells, each candidate equi-joined to exactly the queries that
 probed its cell. Rows are asserted identical — the delta is pure
 job-overhead + scan-sharing. Same comparison for the persisted LSH
-layout (lsh_knn_pruned vs lsh_knn_batch).
+layout (lsh_knn_pruned_df vs lsh_knn_batch_df).
 Usage: python tools/stress_batch_index.py
 """
 
@@ -63,8 +63,9 @@ def main() -> None:
     t0 = time.perf_counter()
     seq_rows = set()
     for qid, qv in queries:
-        for r in ann.ivf_knn_pruned(
-            spark, ivf_path, centroids, qv, k=K, nprobe=8, payload_cols=()
+        for r in ann.ivf_knn(
+            spark.read.parquet(ivf_path), centroids, qv, k=K, nprobe=8,
+            payload_cols=(),
         ).collect():
             seq_rows.add((qid, r["vec_id"], r["score"]))
     t_seq = time.perf_counter() - t0
@@ -131,8 +132,8 @@ def main() -> None:
     t0 = time.perf_counter()
     seq_rows = set()
     for qid, qv in queries:
-        for r in ann.lsh_knn_pruned(
-            spark, lsh_path, qv, k=K, payload_cols=()
+        for r in ann.lsh_knn_pruned_df(
+            spark.read.parquet(lsh_path), qv, k=K, payload_cols=()
         ).collect():
             seq_rows.add((qid, r["vec_id"], r["score"]))
     t_seq = time.perf_counter() - t0
@@ -140,7 +141,9 @@ def main() -> None:
     t0 = time.perf_counter()
     batch_rows = {
         (r["qid"], r["vec_id"], r["score"])
-        for r in ann.lsh_knn_batch(spark, lsh_path, queries, k=K).collect()
+        for r in ann.lsh_knn_batch_df(
+            spark.read.parquet(lsh_path), queries, k=K
+        ).collect()
     }
     t_batch = time.perf_counter() - t0
     eq = batch_rows == seq_rows
@@ -164,8 +167,8 @@ def main() -> None:
     t0 = time.perf_counter()
     seq_rows = set()
     for qid, qv in queries:
-        for r in ann.nsw_search_index(
-            spark, nsw_path, [(qid, qv)], k=K
+        for r in ann.nsw_search_layout(
+            spark.read.parquet(nsw_path), [(qid, qv)], k=K
         ).collect():
             seq_rows.add((r["qid"], r["vec_id"], r["score"]))
     t_seq = time.perf_counter() - t0
@@ -173,7 +176,9 @@ def main() -> None:
     t0 = time.perf_counter()
     batch_rows = {
         (r["qid"], r["vec_id"], r["score"])
-        for r in ann.nsw_search_index(spark, nsw_path, queries, k=K).collect()
+        for r in ann.nsw_search_layout(
+            spark.read.parquet(nsw_path), queries, k=K
+        ).collect()
     }
     t_batch = time.perf_counter() - t0
     eq = batch_rows == seq_rows
@@ -211,8 +216,8 @@ def main() -> None:
     t0 = time.perf_counter()
     seq_rows = set()
     for qid, qv in clustered:
-        for r in ann.lsh_knn_pruned(
-            spark, lsh_path, qv, k=K, payload_cols=()
+        for r in ann.lsh_knn_pruned_df(
+            spark.read.parquet(lsh_path), qv, k=K, payload_cols=()
         ).collect():
             seq_rows.add((qid, r["vec_id"], r["score"]))
     t_seq = time.perf_counter() - t0
@@ -220,7 +225,9 @@ def main() -> None:
     t0 = time.perf_counter()
     batch_rows = {
         (r["qid"], r["vec_id"], r["score"])
-        for r in ann.lsh_knn_batch(spark, lsh_path, clustered, k=K).collect()
+        for r in ann.lsh_knn_batch_df(
+            spark.read.parquet(lsh_path), clustered, k=K
+        ).collect()
     }
     t_batch = time.perf_counter() - t0
     eq = batch_rows == seq_rows

@@ -83,8 +83,9 @@ def main() -> None:
                 emb, os.path.join(tmp, f"lsh_{n}"), dim=DIM, bits=bits, tables=4
             )
             t_lsh = time.perf_counter() - t0
-            got = ann.lsh_knn_pruned(
-                spark, os.path.join(tmp, f"lsh_{n}"), qv, k=K, bits=bits, tables=4
+            got = ann.lsh_knn_pruned_df(
+                spark.read.parquet(os.path.join(tmp, f"lsh_{n}")),
+                qv, k=K, bits=bits, tables=4,
             ).collect()
             assert len(got) == K
             rows.append((n, "lsh", f"bits={bits}, 4 tables", t_lsh))
@@ -95,8 +96,9 @@ def main() -> None:
             assigned, centroids = ann.ivf_index(emb, n_centroids=None)
             ann.ivf_write_partitioned(assigned, os.path.join(tmp, f"ivf_{n}"))
             t_ivf = time.perf_counter() - t0
-            got = ann.ivf_knn_pruned(
-                spark, os.path.join(tmp, f"ivf_{n}"), centroids, qv, k=K
+            got = ann.ivf_knn(
+                spark.read.parquet(os.path.join(tmp, f"ivf_{n}")),
+                centroids, qv, k=K,
             ).collect()
             assert len(got) == K
             rows.append((n, "ivf", f"{len(centroids)} cells (sqrt-N auto)", t_ivf))
@@ -131,8 +133,8 @@ def main() -> None:
                 n_buckets=n_buckets,
             )
             t_nsw = time.perf_counter() - t0
-            got = ann.nsw_search_index(
-                spark, os.path.join(tmp, f"nsw_{n}"), [(0, qv)], k=K
+            got = ann.nsw_search_layout(
+                spark.read.parquet(os.path.join(tmp, f"nsw_{n}")), [(0, qv)], k=K
             ).collect()
             assert len(got) == K
             rows.append(

@@ -61,7 +61,7 @@ def main() -> None:
 
     lines = [
         f"{N_ROWS:,} uniform 64-d rows (ANN worst case), 8 tables, 16",
-        "corpus-member queries, top-5 via one lsh_knn_batch scan of the",
+        "corpus-member queries, top-5 via one lsh_knn_batch_df scan of the",
         "persisted layout. `rows/bucket` is the at-ingest partition size —",
         "the quantity a FIXED bits lets grow without bound; `probe frac` =",
         "per-table probed buckets / 2^bits (sum_{i<=h} C(bits,i) / 2^bits).",
@@ -77,8 +77,8 @@ def main() -> None:
             )
         t0 = time.perf_counter()
         got: dict[int, set] = {}
-        for r in ann.lsh_knn_batch(
-            spark, path, queries, k=K, bits=bits, max_hamming=h
+        for r in ann.lsh_knn_batch_df(
+            spark.read.parquet(path), queries, k=K, bits=bits, max_hamming=h
         ).collect():
             got.setdefault(r["qid"], set()).add(r["vec_id"])
         t = time.perf_counter() - t0

@@ -80,7 +80,7 @@ def main() -> None:
         t0 = time.perf_counter()
         appended = col.refresh_nsw_index()
         t_refresh = time.perf_counter() - t0
-        assert col._nsw_delta_exceeded(), "fixture must cross the threshold"
+        assert col._index_drift_exceeded("nsw"), "fixture must cross the threshold"
 
         queries = [
             (i, [float(x) for x in r["embedding"]])
@@ -97,7 +97,7 @@ def main() -> None:
 
             got: dict = {}
             res = ann.nsw_search_layout(
-                col._nsw_layout_df(), queries, k=K,
+                col._masked_layout_df("nsw"), queries, k=K,
                 id_col="id", emb_col="embedding",
             ).collect()
             for r in res:
@@ -128,7 +128,7 @@ def main() -> None:
             f"- churn to the escalation threshold: {q:,} new + {q:,} "
             f"updated + {n//50:,} deleted (one refresh segment, "
             f"{appended:,} delta rows, {t_refresh:.1f}s; delta fraction "
-            ">= 0.5 -> _nsw_delta_exceeded fires)",
+            ">= 0.5 -> _index_drift_exceeded(\"nsw\") fires)",
             f"- consolidate_nsw_index: **{t_cons:.1f}s** "
             f"({rows_cons:,} rows merged) vs full rebuild {t_reb:.1f}s "
             f"— **{frac:.0%} of rebuild cost** (gate: <50%)",

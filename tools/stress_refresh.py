@@ -97,7 +97,7 @@ def main() -> None:
         ]
         top = [r["id"] for r in col.search_lsh(qv, limit=1).collect()]
         assert top == [3], f"updated id not served by refreshed LSH: {top}"
-        meta_cells = len(col._ivf_meta_fresh("probe")["centroids"])
+        meta_cells = len(col._fresh_meta("ivf", "probe")["centroids"])
         exact = [r["id"] for r in col.search(qv, limit=K).collect()]
         full = [
             r["id"]

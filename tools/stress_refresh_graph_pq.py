@@ -118,7 +118,8 @@ def main() -> None:
             from vector_database_spark.operators import ann
 
             res = ann.nsw_search_layout(
-                col._nsw_layout_df(), queries, k=K, id_col="id", emb_col="embedding"
+                col._masked_layout_df("nsw"), queries, k=K,
+                id_col="id", emb_col="embedding",
             ).collect()
             for r in res:
                 got.setdefault(r["qid"], set()).add(r["id"])
@@ -166,11 +167,7 @@ def main() -> None:
         )
 
         def shifted_recon_err():
-            meta_path = _os.path.join(
-                col._ivfpq_index_path, "_index_meta.json"
-            )
-            with open(meta_path) as fh:
-                meta = _json.load(fh)
+            meta = col._index_meta("ivfpq")
             books = _np.asarray(meta["codebooks"], dtype=_np.float64)
             row = (
                 _ann.pq_encode(

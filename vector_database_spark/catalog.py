@@ -297,10 +297,12 @@ class Catalog:
         self._catalog_path = os.path.join(root, "_catalog.json")
         self._lock_path = os.path.join(root, "_catalog.lock")
         # resolved ANN layout relations, at most one per index path:
-        # {index_path: (generation, DataFrame)}. Reusing the relation
-        # reuses its file listing, so a search skips re-listing every
-        # cell directory; see VectorCollection._masked_layout_df
-        self._layouts: dict[str, tuple[str, DataFrame]] = {}
+        # {index_path: (generation, DataFrame, raw row count or None)}.
+        # Reusing the relation reuses its file listing, so a search skips
+        # re-listing every cell directory; see
+        # VectorCollection._masked_layout_df. The raw count is filled in
+        # by the first search that needs it (_ivfpq_auto_shortlist)
+        self._layouts: dict[str, tuple[str, DataFrame, int | None]] = {}
         # salts the tokens this handle derives for segment commits, so
         # two handles committing the same segment never share one
         self._handle_id = uuid.uuid4().hex
@@ -379,10 +381,42 @@ class Catalog:
                 os.remove(tmp)
             raise
 
-    def _evict_layouts(self, collection_path: str) -> None:
+    def _evict_layouts(self, name: str) -> None:
         """Release the cached layouts of every index of a collection."""
-        for kind in VectorCollection._INDEX_ROUTE_PRIORITY:
-            self._layouts.pop(f"{collection_path}__{kind}", None)
+        for path in self._collection_dirs(name):
+            self._layouts.pop(path, None)
+
+    def _collection_dirs(self, name: str) -> list[str]:
+        return VectorCollection._owned_dirs(os.path.join(self.root, name))
+
+    @staticmethod
+    def _check_name(name: str) -> None:
+        """A collection's name is one entry in the catalog root. An empty
+        name, ``.``, ``..`` or one holding a path separator would put its
+        directories at the root itself, its parent or elsewhere, where a
+        drop would delete them."""
+        if name in ("", ".", "..") or any(
+            sep and sep in name for sep in (os.sep, os.altsep)
+        ):
+            raise ValueError(f"invalid collection name {name!r}")
+
+    def _remove_collection_dirs(self, name: str, cat: dict) -> None:
+        """Delete what ``name`` left on disk, so a collection created
+        under the name later starts empty. Called under the catalog lock
+        with a catalog that has no entry for ``name``; a directory that
+        another collection in it owns (a collection literally named
+        ``x__ivf`` when ``x`` goes) is kept."""
+        import shutil
+
+        owned = {
+            d
+            for other in self._collections(cat)
+            for d in self._collection_dirs(other)
+        }
+        for d in self._collection_dirs(name):
+            if d not in owned:
+                shutil.rmtree(d, ignore_errors=True)
+        self._evict_layouts(name)
 
     # -- DDL (SURVEY A1/A2) ------------------------------------------------
     def collection_exists(self, name: str) -> bool:
@@ -410,11 +444,15 @@ class Catalog:
         """
         if metric not in VALID_METRICS:
             raise ValueError(f"metric must be one of {VALID_METRICS}, got {metric!r}")
+        self._check_name(name)
         with self._lock():
             cat = self._load()
             if name in cat.get(ALIASES_KEY, {}):
                 raise ValueError(f"{name!r} is an alias; pick another name")
             if name not in cat:
+                # a drop that crashed between its catalog commit and its
+                # deletes leaves data a new collection must not read
+                self._remove_collection_dirs(name, cat)
                 cat[name] = {"dim": dim, "metric": metric, "version": 0}
                 if tenant_key is not None:
                     cat[name]["tenant_key"] = tenant_key
@@ -456,14 +494,22 @@ class Catalog:
         )
 
     def drop_collection(self, name: str) -> None:
+        """Remove a collection, its aliases and everything it stored:
+        points, tombstones and every index (Qdrant's delete_collection
+        deletes the points too). The catalog commit comes first, so a
+        crash before the deletes leaves orphaned directories, which
+        create_collection clears. Dropping an unknown name deletes
+        nothing."""
+        self._check_name(name)
         with self._lock():
             cat = self._load()
-            cat.pop(name, None)
+            dropped = cat.pop(name, None)
             aliases = cat.get(ALIASES_KEY, {})
             for a in [a for a, tgt in aliases.items() if tgt == name]:
                 del aliases[a]  # no dangling aliases (Qdrant drops them too)
             self._save(cat)
-        self._evict_layouts(os.path.join(self.root, name))
+            if dropped is not None:
+                self._remove_collection_dirs(name, cat)
 
     def list_collections(self) -> list[str]:
         return sorted(self._collections(self._load()))
@@ -556,9 +602,41 @@ class VectorCollection:
             return empty
         return spark.read.parquet(self.path)
 
+    # -- on-disk names: each directory a collection owns is spelled here
+    # (the index ones in _index_dirs) and nowhere else, so a drop cannot
+    # miss one that a new collection of the same name would read back
+    @staticmethod
+    def _tombstones_of(path: str) -> str:
+        return path + "__tombstones"
+
+    @staticmethod
+    def _fold_asides(path: str) -> tuple[str, str]:
+        """(new, old): a fold's folded layout and the old one its swap parks."""
+        return path + "__compact", path + "__prefold"
+
+    @staticmethod
+    def _shrink_asides(tombstone_path: str) -> tuple[str, str]:
+        """(new, old), the same pair for a tombstone-log shrink."""
+        return tombstone_path + "__shrink", tombstone_path + "__preshrink"
+
+    @classmethod
+    def _owned_dirs(cls, path: str) -> list[str]:
+        """Every directory the collection at ``path`` may own: its data,
+        its tombstone log, the asides a crashed fold or tombstone shrink
+        leaves (each recovered into place on the next read), and each
+        index family's layout, mask and consolidation stage."""
+        tombs = cls._tombstones_of(path)
+        return [
+            path,
+            *cls._fold_asides(path),
+            tombs,
+            *cls._shrink_asides(tombs),
+            *(d for kind in cls._INDEX_KINDS for d in cls._index_dirs(path, kind)),
+        ]
+
     @property
     def _tombstone_path(self) -> str:
-        return self.path + "__tombstones"
+        return self._tombstones_of(self.path)
 
     def _resolved_df(
         self, as_of_version: int | None = None, tenant: str | None = None
@@ -1114,7 +1192,7 @@ class VectorCollection:
         from vector_database_spark.functions.vector import computed_once
         from vector_database_spark.operators import ann
 
-        meta = self._lsh_meta_fresh("near_duplicates")
+        meta = self._fresh_meta("lsh", "near_duplicates")
         # norms tagged ONCE PER ROW on each side (the _pair_sides lesson:
         # a per-pair cosine() pays 3 folds; try_divide(dot, nb*nc) pays 1)
         batch_sigs = ann.lsh_long_form(
@@ -1137,7 +1215,7 @@ class VectorCollection:
         from vector_database_spark.operators.dedup import norm_side
 
         layout = norm_side(
-            self._lsh_layout_df(meta),
+            self._masked_layout_df("lsh", meta),
             "id",
             "embedding",
             "corpus_id",
@@ -1683,7 +1761,7 @@ class VectorCollection:
         # precomputed value instead of trusting a stale one.
         raw_version = self.catalog._load()[self.info.name]["version"]
         raw_rows = self._approx_live_rows()
-        for kind in self._INDEX_ROUTE_PRIORITY:
+        for kind in self._INDEX_KINDS:
             st = status[kind]
             if not st["exists"]:
                 continue
@@ -1712,9 +1790,7 @@ class VectorCollection:
                     # healthy index — but a mask grown past the layout
                     # fraction is pure search-cost debt the non-graph
                     # families can shed without retraining (r11)
-                    if kind in self._LAYOUT_PARTITION_BY and (
-                        self._mask_consolidation_due(kind)
-                    ):
+                    if kind != "nsw" and self._mask_consolidation_due(kind):
                         self._consolidate_layout(kind)
                         report[kind] = "consolidated"
                     else:
@@ -1735,8 +1811,8 @@ class VectorCollection:
                     # re-evaluate before declaring the index healthy
                     drifted = self._index_drift_exceeded(kind)
                     if not drifted:
-                        if kind in self._LAYOUT_PARTITION_BY and (
-                            self._mask_consolidation_due(kind)
+                        if kind != "nsw" and self._mask_consolidation_due(
+                            kind
                         ):
                             self._consolidate_layout(kind)
                             report[kind] = "consolidated"
@@ -1760,13 +1836,9 @@ class VectorCollection:
                     continue
                 except ValueError:
                     pass
-            meta_path = os.path.join(
-                getattr(self, f"_{kind}_index_path"), "_index_meta.json"
-            )
+            meta = self._index_meta(kind)
             params = {}
-            if os.path.exists(meta_path):
-                with open(meta_path) as fh:
-                    meta = json.load(fh)
+            if meta is not None:
                 if "build_params" in meta:
                     params = meta["build_params"]
                 else:
@@ -1808,11 +1880,7 @@ class VectorCollection:
         never trigger a spurious full rebuild (r9 review). Explicitly
         pinned widths (and legacy metas, whose intent is unknowable)
         never escalate — the caller's choice stands."""
-        meta_path = os.path.join(self._lsh_index_path, "_index_meta.json")
-        if not os.path.exists(meta_path):
-            return False
-        with open(meta_path) as fh:
-            meta = json.load(fh)
+        meta = self._index_meta("lsh") or {}
         bp = meta.get("build_params")
         if bp is None or bp.get("bits") is not None:
             return False
@@ -1837,11 +1905,7 @@ class VectorCollection:
         hysteresis, so churn cannot thrash rebuilds; an opted-out,
         never-folded collection may escalate early, which only re-trains
         sooner than strictly needed."""
-        meta_path = os.path.join(self._ivf_index_path, "_index_meta.json")
-        if not os.path.exists(meta_path):
-            return False
-        with open(meta_path) as fh:
-            meta = json.load(fh)
+        meta = self._index_meta("ivf") or {}
         bp = meta.get("build_params")
         if bp is None or bp.get("n_centroids") is not None:
             return False
@@ -1853,77 +1917,54 @@ class VectorCollection:
         rows = raw_rows if raw_rows is not None else self._approx_live_rows()
         return ann._auto_n_centroids(rows) >= 2 * built_k
 
-    def _ivf_drift_exceeded(self) -> bool:
-        """True iff the persisted IVF meta's drift ratio crossed
+    def _index_drift_exceeded(self, kind: str) -> bool:
+        """optimize()'s per-family quality escalation, read from the
+        persisted index meta.
+
+        IVF and IVFPQ: the meta's drift ratio crossed
         IVF_DRIFT_REBUILD_RATIO on a non-trivial refreshed volume
         (_ivf_drift_volume_ok — a handful of outlier rows must not force
-        a full KMeans retrain of a large collection, r9 review)."""
-        return self._meta_drift_exceeded(self._ivf_index_path)
+        a full KMeans retrain of a large collection, r9 review). IVF's
+        statistic is the centroid-assign distance; IVFPQ's (r10,
+        mirroring the r9 IVF pattern) is the mean ADC reconstruction
+        error under the same keys (see build_ivfpq_index's drift_stat
+        marker): pinned codebooks quantize a shifted write distribution
+        WORSE — recall decays with no coverage signal; past the ratio
+        only a retrain (build_ivfpq_index, which optimize() runs)
+        recovers it.
 
-    def _ivfpq_drift_exceeded(self) -> bool:
-        """IVFPQ codebook drift (r10, mirroring the r9 IVF pattern): the
-        persisted meta's build-vs-refresh ratio of mean ADC
-        reconstruction error, same threshold and volume floor. Pinned
-        codebooks quantize a shifted write distribution WORSE — recall
-        decays with no coverage signal; past the ratio only a retrain
-        (build_ivfpq_index, which optimize() runs) recovers it."""
-        return self._meta_drift_exceeded(self._ivfpq_index_path)
+        NSW (r10): the accumulated CHURN fraction vs the base build.
+        Delta segments are small independent graphs and masked-out base
+        nodes leave holes the beam must route around — both decay recall
+        gradually, and neither has a per-row drift statistic (graph
+        quality is global). Per segment the signal is max(rows,
+        superseded): superseded covers delete-only churn (mask holes with
+        zero delta rows — rows alone would never fire, r10 review), rows
+        covers insert-heavy growth on early-r10 metas that predate the
+        superseded field. Past NSW_DELTA_REBUILD_FRACTION of build_rows,
+        optimize() re-trains one consolidated graph instead of
+        refreshing again.
 
-    def _meta_drift_exceeded(self, index_path: str) -> bool:
-        """Shared drift-escalation predicate over a persisted index meta
-        (IVF: centroid-assign distance; IVFPQ: ADC reconstruction error —
-        same keys, see build_ivfpq_index's drift_stat marker)."""
-        meta_path = os.path.join(index_path, "_index_meta.json")
-        if not os.path.exists(meta_path):
+        LSH never escalates: seeded hyperplanes are data-independent —
+        only coverage and width can stale, both handled elsewhere."""
+        meta = self._index_meta(kind)
+        if meta is None or kind == "lsh":
             return False
-        with open(meta_path) as fh:
-            meta = json.load(fh)
+        if kind == "nsw":
+            build_rows = meta.get("build_rows")
+            if not build_rows:
+                return False  # legacy meta: no baseline to compare against
+            churn = sum(
+                max(s["rows"], s.get("superseded", 0))
+                for s in (meta.get("refresh_stats") or [])
+            )
+            return churn >= NSW_DELTA_REBUILD_FRACTION * build_rows
         ratio = _ivf_drift_ratio(meta)
         return (
             ratio is not None
             and ratio >= IVF_DRIFT_REBUILD_RATIO
             and _ivf_drift_volume_ok(meta)
         )
-
-    def _nsw_delta_exceeded(self) -> bool:
-        """NSW's rebuild-escalation signal (r10): the accumulated
-        CHURN fraction vs the base build. Delta segments are small
-        independent graphs and masked-out base nodes leave holes the
-        beam must route around — both decay recall gradually, and
-        neither has a per-row drift statistic (graph quality is global).
-        Per segment the signal is max(rows, superseded): superseded
-        covers delete-only churn (mask holes with zero delta rows —
-        rows alone would never fire, r10 review), rows covers
-        insert-heavy growth on early-r10 metas that predate the
-        superseded field. Past NSW_DELTA_REBUILD_FRACTION of
-        build_rows, optimize() re-trains one consolidated graph instead
-        of refreshing again."""
-        meta_path = os.path.join(self._nsw_index_path, "_index_meta.json")
-        if not os.path.exists(meta_path):
-            return False
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        build_rows = meta.get("build_rows")
-        if not build_rows:
-            return False  # legacy meta: no baseline to compare against
-        churn = sum(
-            max(s["rows"], s.get("superseded", 0))
-            for s in (meta.get("refresh_stats") or [])
-        )
-        return churn >= NSW_DELTA_REBUILD_FRACTION * build_rows
-
-    def _index_drift_exceeded(self, kind: str) -> bool:
-        """optimize()'s per-family quality-escalation dispatch: drift
-        ratio for IVF (centroids) and IVFPQ (codebooks), delta fraction
-        for NSW, never for LSH (seeded hyperplanes are data-independent
-        — only coverage and width can stale, both handled elsewhere)."""
-        if kind == "ivf":
-            return self._ivf_drift_exceeded()
-        if kind == "ivfpq":
-            return self._ivfpq_drift_exceeded()
-        if kind == "nsw":
-            return self._nsw_delta_exceeded()
-        return False
 
     def _require_points(self, op: str) -> None:
         """Fail fast with a clear error when an index build is attempted
@@ -1949,7 +1990,7 @@ class VectorCollection:
         compact()'s stale-hint version guard cannot see it — the caller
         must invalidate any live-rows hint computed before the recovery
         (r9 review)."""
-        tmp = self.path + "__compact"
+        tmp, _ = self._fold_asides(self.path)
         if not os.path.exists(self.path) and os.path.isdir(tmp):
             try:
                 os.rename(tmp, self.path)
@@ -2047,8 +2088,7 @@ class VectorCollection:
                 ).withColumn("version", F.lit(fold_to).cast("long"))
                 later = self._raw_df().filter(F.col("version") > fold_to)
                 current = folded.unionByName(later)
-            tmp = self.path + "__compact"
-            old = self.path + "__prefold"
+            tmp, old = self._fold_asides(self.path)
             shutil.rmtree(tmp, ignore_errors=True)
             shutil.rmtree(old, ignore_errors=True)
             # the policy's hint counts CURRENT live rows — in partial mode
@@ -2076,16 +2116,10 @@ class VectorCollection:
                 # has nothing to train on — dropping them routes
                 # search_auto to the exact scan of the empty state.
                 shutil.rmtree(self.path, ignore_errors=True)
-                for idx_path in (
-                    self._nsw_index_path,
-                    self._lsh_index_path,
-                    self._ivf_index_path,
-                    self._ivfpq_index_path,
-                    self._lsh_mask_path,
-                    self._ivf_mask_path,
-                ):
-                    shutil.rmtree(idx_path, ignore_errors=True)
-                self.catalog._evict_layouts(self.path)
+                for kind in self._INDEX_KINDS:
+                    shutil.rmtree(self._index_path(kind), ignore_errors=True)
+                    shutil.rmtree(self._mask_path(kind), ignore_errors=True)
+                self.catalog._evict_layouts(self.info.name)
             else:
                 # range-repartition on (partition cols, id) so the folded
                 # layout is ~one file per (bucket, id-range) instead of
@@ -2155,8 +2189,7 @@ class VectorCollection:
 
         if not os.path.exists(self._tombstone_path):
             return
-        tmp = self._tombstone_path + "__shrink"
-        old = self._tombstone_path + "__preshrink"
+        tmp, old = self._shrink_asides(self._tombstone_path)
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(old, ignore_errors=True)
         kept = self.catalog.spark.read.parquet(self._tombstone_path).filter(
@@ -2190,8 +2223,7 @@ class VectorCollection:
         every read forever."""
         import shutil
 
-        tmp = self._tombstone_path + "__shrink"
-        old = self._tombstone_path + "__preshrink"
+        tmp, old = self._shrink_asides(self._tombstone_path)
         if not os.path.exists(self._tombstone_path):
             for cand in (tmp, old):
                 if os.path.isdir(cand):
@@ -2284,10 +2316,6 @@ class VectorCollection:
         )
 
     # -- graph ANN index (build-once, search-many) --------------------------
-    @property
-    def _nsw_index_path(self) -> str:
-        return self.path + "__nsw"
-
     def build_nsw_index(
         self, n_buckets: int | None = None, M: int = 8, ef_construction: int = 64
     ) -> None:
@@ -2330,16 +2358,16 @@ class VectorCollection:
             emb_col="embedding",
         ).withColumn("__seg", F.lit(0))
         built.write.mode("overwrite").partitionBy("_b").parquet(
-            self._nsw_index_path
+            self._index_path("nsw")
         )
         import shutil as _shutil
 
-        _shutil.rmtree(self._nsw_mask_path, ignore_errors=True)
+        _shutil.rmtree(self._mask_path("nsw"), ignore_errors=True)
         build_rows = int(
-            self.catalog.spark.read.parquet(self._nsw_index_path).count()
+            self.catalog.spark.read.parquet(self._index_path("nsw")).count()
         )
         self.catalog._write_index_meta(
-            self._nsw_index_path,
+            self._index_path("nsw"),
             {
                 "built_at_version": current_version,
                 "covers_version": current_version,
@@ -2351,7 +2379,7 @@ class VectorCollection:
                     "ef_construction": ef_construction,
                 },
                 # sizes the delta-fraction escalation
-                # (_nsw_delta_exceeded): graph quality decays as
+                # (_index_drift_exceeded): graph quality decays as
                 # masked-out base nodes and small delta graphs
                 # accumulate, so optimize() retrains past the ratio
                 "build_rows": build_rows,
@@ -2373,51 +2401,15 @@ class VectorCollection:
         equals exact search (asserted in tests/test_catalog.py)."""
         from vector_database_spark.operators import ann
 
-        meta = self._nsw_meta_fresh("search_nsw")
+        meta = self._fresh_meta("nsw", "search_nsw")
         return ann.nsw_search_layout(
-            self._nsw_layout_df(meta),
+            self._masked_layout_df("nsw", meta),
             [(0, [float(x) for x in query_vector])],
             k=limit,
             ef=ef,
             id_col="id",
             emb_col="embedding",
         )
-
-    @property
-    def _nsw_mask_path(self) -> str:
-        return self.path + "__nsw_mask"
-
-    def _nsw_layout_df(self, meta: dict | None = None) -> DataFrame:
-        return self._masked_layout_df(
-            self._nsw_index_path, self._nsw_mask_path, meta
-        )
-
-    def _nsw_meta_fresh(self, op: str) -> dict:
-        """Load the NSW index meta and enforce the coverage contract:
-        base build or a later refresh_nsw_index must cover the current
-        collection version (the same contract as the other families)."""
-        if self.info.metric != "cosine":
-            raise ValueError(
-                f"{op} requires a cosine collection; "
-                f"{self.info.name!r} uses metric={self.info.metric!r}"
-            )
-        meta_path = os.path.join(self._nsw_index_path, "_index_meta.json")
-        if not os.path.exists(meta_path):
-            raise ValueError(
-                f"collection {self.info.name!r} has no NSW index; "
-                "call build_nsw_index() first"
-            )
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        current_version = self.catalog._load()[self.info.name]["version"]
-        covers = meta.get("covers_version", meta["built_at_version"])
-        if covers != current_version:
-            raise ValueError(
-                f"NSW index of {self.info.name!r} covers version "
-                f"{covers} but the collection is at {current_version}; "
-                "refresh_nsw_index() or rebuild with build_nsw_index()"
-            )
-        return meta
 
     # a refresh segment's delta graphs land in their own _b partitions:
     # segment s's buckets live at [s·STRIDE, (s+1)·STRIDE) — disjoint
@@ -2479,13 +2471,7 @@ class VectorCollection:
             # writes it — without the pin the applyInPandas graph build
             # (the expensive part of an NSW refresh) would run twice
 
-        return self._refresh_protocol(
-            "nsw",
-            self._nsw_index_path,
-            self._nsw_mask_path,
-            build_delta,
-            partition_by=("_b",),
-        )
+        return self._refresh_protocol("nsw", build_delta)
 
     def consolidate_nsw_index(self) -> int:
         """Fold the NSW delta segments back into the base graphs WITHOUT
@@ -2512,27 +2498,28 @@ class VectorCollection:
         build_nsw_index overwrite. Returns the consolidated row count."""
         from vector_database_spark.operators import ann
 
-        meta = self._nsw_meta_fresh("consolidate_nsw_index")
+        meta = self._fresh_meta("nsw", "consolidate_nsw_index")
         bp = meta.get("build_params") or {}
         merged = ann.nsw_merge_graph_rows(
-            self._nsw_layout_df(),
+            self._masked_layout_df("nsw"),
             M=bp.get("M", 8),
             ef_construction=bp.get("ef_construction", 64),
             id_col="id",
             emb_col="embedding",
         ).withColumn("__seg", F.lit(0))
-        staging = self._nsw_index_path + "__consolidate_stage"
+        index_path = self._index_path("nsw")
+        staging = self._stage_path("nsw")
         import shutil as _shutil
 
         _shutil.rmtree(staging, ignore_errors=True)
         merged.write.mode("overwrite").partitionBy("_b").parquet(staging)
         rows = int(self.catalog.spark.read.parquet(staging).count())
-        _shutil.rmtree(self._nsw_index_path, ignore_errors=True)
-        os.rename(staging, self._nsw_index_path)
-        _shutil.rmtree(self._nsw_mask_path, ignore_errors=True)
+        _shutil.rmtree(index_path, ignore_errors=True)
+        os.rename(staging, index_path)
+        _shutil.rmtree(self._mask_path("nsw"), ignore_errors=True)
         current_version = self.catalog._load()[self.info.name]["version"]
         self.catalog._write_index_meta(
-            self._nsw_index_path,
+            index_path,
             {
                 "built_at_version": meta.get(
                     "built_at_version", current_version
@@ -2548,10 +2535,6 @@ class VectorCollection:
         return rows
 
     # -- IVF index (coarse quantization, nprobe = partition pruning) --------
-    @property
-    def _ivf_index_path(self) -> str:
-        return self.path + "__ivf"
-
     def build_ivf_index(self, n_centroids: int | None = None) -> None:
         """Materialize the IVF index for the CURRENT live state: KMeans
         centroids + a centroid_id-partitioned Parquet layout
@@ -2582,18 +2565,18 @@ class VectorCollection:
         # layout (see refresh_ivf_index) — the segment+tombstone design
         # every LSM-ish index uses
         ann.ivf_write_partitioned(
-            assigned.withColumn("__seg", F.lit(0)), self._ivf_index_path
+            assigned.withColumn("__seg", F.lit(0)), self._index_path("ivf")
         )
         import shutil as _shutil
 
-        _shutil.rmtree(self._ivf_mask_path, ignore_errors=True)
+        _shutil.rmtree(self._mask_path("ivf"), ignore_errors=True)
         # build-time drift baseline (r9): mean distance of every indexed
         # row to its assigned centroid. Computed off the just-written
         # layout — one plain parquet scan, instead of re-executing the
         # KMeans.transform lineage a third time.
         dist = _dist_to_assigned_centroid(centroids)
         build_mean, build_rows = (
-            self.catalog.spark.read.parquet(self._ivf_index_path)
+            self.catalog.spark.read.parquet(self._index_path("ivf"))
             .select(
                 dist(
                     F.col("embedding").cast("array<double>"),
@@ -2604,7 +2587,7 @@ class VectorCollection:
             .first()
         )
         self.catalog._write_index_meta(
-            self._ivf_index_path,
+            self._index_path("ivf"),
             {
                 "built_at_version": current_version,
                 # highest collection version this index correctly
@@ -2620,10 +2603,6 @@ class VectorCollection:
                 "build_rows": int(build_rows),
             },
         )
-
-    @property
-    def _ivf_mask_path(self) -> str:
-        return self.path + "__ivf_mask"
 
     def refresh_ivf_index(self) -> int:
         """INCREMENTALLY fold the writes since the last build/refresh into
@@ -2664,24 +2643,11 @@ class VectorCollection:
                 "__assign_dist",
             )
 
-        return self._refresh_protocol(
-            "ivf",
-            self._ivf_index_path,
-            self._ivf_mask_path,
-            build_delta,
-            partition_by=("centroid_id",),
-        )
+        return self._refresh_protocol("ivf", build_delta)
 
-    def _refresh_protocol(
-        self,
-        kind: str,
-        index_path: str,
-        mask_path: str,
-        build_delta,
-        partition_by: tuple[str, ...],
-    ) -> int:
-        """The segment-refresh protocol shared by refresh_ivf_index and
-        refresh_lsh_index (one copy of the guards and commit ordering —
+    def _refresh_protocol(self, kind: str, build_delta) -> int:
+        """The segment-refresh protocol shared by every refresh_<kind>_index
+        (one copy of the guards and commit ordering —
         r8 review): open + validate the meta, compute the written /
         superseded id sets from the append-only logs (pinned eagerly so a
         concurrent writer's auto-compact rmtree'ing the tombstone dir
@@ -2695,16 +2661,17 @@ class VectorCollection:
         mask), re-check the fold guard, then advance coverage.
 
         ``build_delta(live, meta, seg)`` returns the family's seg-stamped
-        delta DataFrame."""
+        delta DataFrame, which lands under the family's layout partition
+        keys."""
         KIND = kind.upper()
-        meta_path = os.path.join(index_path, "_index_meta.json")
-        if not os.path.exists(meta_path):
+        index_path = self._index_path(kind)
+        partition_by = self._INDEX_KINDS[kind][1]
+        meta = self._index_meta(kind)
+        if meta is None:
             raise ValueError(
                 f"collection {self.info.name!r} has no {KIND} index; "
                 f"call build_{kind}_index() first"
             )
-        with open(meta_path) as fh:
-            meta = json.load(fh)
         if "next_seg" not in meta:
             # pre-segment legacy layout: its base files have no __seg
             # column, so appending seg-stamped delta files would leave a
@@ -2791,7 +2758,7 @@ class VectorCollection:
                 )
             self._commit_seg_files(
                 superseded.select("id", F.lit(seg).alias("mask_seg")),
-                mask_path,
+                self._mask_path(kind),
                 seg,
             )
 
@@ -2908,9 +2875,74 @@ class VectorCollection:
             )
         return rows.select("id", "embedding", "payload")
 
-    def _masked_layout_df(
-        self, index_path: str, mask_path: str, meta: dict | None = None
-    ) -> DataFrame:
+    # -- kind-keyed index plumbing, shared by every family ------------------
+    # What differs between the ANN index families: the label their
+    # coverage errors use, and their layout's partition keys (refresh
+    # segments and the no-retrain consolidation write with the same
+    # keys). Everything else derives from the kind string. Ordered by
+    # auto-routing priority: measured recall@5 on the bench fixture
+    # (BENCH_LOCAL.json ann_operating_points / recall_at_5) — nsw 1.0,
+    # lsh 0.90, ivf 0.88, ivfpq 0.82 at their default points
+    _INDEX_KINDS = {
+        "nsw": ("NSW", ("_b",)),
+        "lsh": ("LSH", ("table", "sig")),
+        "ivf": ("IVF", ("centroid_id",)),
+        "ivfpq": ("IVF+PQ", ("centroid_id",)),
+    }
+
+    @staticmethod
+    def _index_dirs(path: str, kind: str) -> tuple[str, str, str]:
+        """``kind``'s layout, refresh-mask and consolidation-stage dirs
+        for the collection at ``path``."""
+        index = f"{path}__{kind}"
+        return index, index + "_mask", index + "__consolidate_stage"
+
+    def _index_path(self, kind: str) -> str:
+        return self._index_dirs(self.path, kind)[0]
+
+    def _mask_path(self, kind: str) -> str:
+        return self._index_dirs(self.path, kind)[1]
+
+    def _stage_path(self, kind: str) -> str:
+        return self._index_dirs(self.path, kind)[2]
+
+    def _index_meta(self, kind: str) -> dict | None:
+        """``kind``'s persisted index meta; None when no index exists."""
+        meta_path = os.path.join(self._index_path(kind), "_index_meta.json")
+        try:
+            with open(meta_path) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            return None
+
+    def _fresh_meta(self, kind: str, op: str) -> dict:
+        """Load ``kind``'s index meta and enforce the coverage contract
+        every search, consolidation and indexed probe relies on: the base
+        build or a later refresh_<kind>_index must cover the collection's
+        current version."""
+        if self.info.metric != "cosine":
+            raise ValueError(
+                f"{op} requires a cosine collection; "
+                f"{self.info.name!r} uses metric={self.info.metric!r}"
+            )
+        label = self._INDEX_KINDS[kind][0]
+        meta = self._index_meta(kind)
+        if meta is None:
+            raise ValueError(
+                f"collection {self.info.name!r} has no {label} index; "
+                f"call build_{kind}_index() first"
+            )
+        current_version = self.catalog._load()[self.info.name]["version"]
+        covers = meta.get("covers_version", meta["built_at_version"])
+        if covers != current_version:
+            raise ValueError(
+                f"{label} index of {self.info.name!r} covers version "
+                f"{covers} but the collection is at {current_version}; "
+                f"refresh_{kind}_index() or rebuild with build_{kind}_index()"
+            )
+        return meta
+
+    def _masked_layout_df(self, kind: str, meta: dict | None = None) -> DataFrame:
         """A segment-stamped index layout with refresh segments RESOLVED:
         superseded rows (older __seg of a rewritten id, any row of a
         deleted id) drop via the side mask — size-gated broadcast, same
@@ -2930,16 +2962,18 @@ class VectorCollection:
         a token (written before tokens existed) reads uncached."""
         generation = (meta or {}).get("generation")
         if generation is None:
-            return self._read_masked_layout(index_path, mask_path)
+            return self._read_masked_layout(kind)
+        index_path = self._index_path(kind)
         cached = self.catalog._layouts.get(index_path)
         if cached is not None and cached[0] == generation:
             return cached[1]
-        layout = self._read_masked_layout(index_path, mask_path)
-        self.catalog._layouts[index_path] = (generation, layout)
+        layout = self._read_masked_layout(kind)
+        self.catalog._layouts[index_path] = (generation, layout, None)
         return layout
 
-    def _read_masked_layout(self, index_path: str, mask_path: str) -> DataFrame:
-        rows = self.catalog.spark.read.parquet(index_path)
+    def _read_masked_layout(self, kind: str) -> DataFrame:
+        mask_path = self._mask_path(kind)
+        rows = self.catalog.spark.read.parquet(self._index_path(kind))
         if "__seg" not in rows.columns:
             rows = rows.withColumn("__seg", F.lit(0))
         else:
@@ -2964,14 +2998,6 @@ class VectorCollection:
             .drop("__mask_seg")
         )
 
-    # partitioning of each non-graph family's persisted layout — the
-    # shared no-retrain compaction below rewrites with the same keys
-    _LAYOUT_PARTITION_BY = {
-        "ivf": ("centroid_id",),
-        "ivfpq": ("centroid_id",),
-        "lsh": ("table", "sig"),
-    }
-
     def _mask_consolidation_due(self, kind: str) -> bool:
         """True when ``kind``'s side mask has grown to
         LAYOUT_MASK_CONSOLIDATE_FRACTION of its layout (footer row
@@ -2980,8 +3006,7 @@ class VectorCollection:
         more than once: an over-estimate that only consolidates
         EARLIER, the safe direction (each mask row is also real search
         join cost)."""
-        index_path = getattr(self, f"_{kind}_index_path")
-        mask_path = getattr(self, f"_{kind}_mask_path")
+        index_path, mask_path = self._index_path(kind), self._mask_path(kind)
         if not os.path.isdir(mask_path) or not os.path.isdir(index_path):
             return False
         spark = self.catalog.spark
@@ -2994,12 +3019,8 @@ class VectorCollection:
         # `tables` copies per id — normalize to per-id units or the
         # multi-table families would need tables x the churn to trigger
         if kind == "lsh":
-            meta_file = os.path.join(index_path, "_index_meta.json")
-            try:
-                with open(meta_file) as fh:
-                    layout_rows //= max(int(json.load(fh).get("tables", 1)), 1)
-            except (OSError, ValueError):
-                pass
+            meta = self._index_meta(kind) or {}
+            layout_rows //= max(int(meta.get("tables", 1)), 1)
         return mask_rows >= LAYOUT_MASK_CONSOLIDATE_FRACTION * max(
             layout_rows, 1
         )
@@ -3026,15 +3047,11 @@ class VectorCollection:
         also keeps incrementing — segment ids are never reused.
         Requires a FRESH index (optimize() refreshes first). Returns
         the consolidated row count."""
-        getattr(self, f"_{kind}_meta_fresh")(f"consolidate_{kind}_index")
-        index_path = getattr(self, f"_{kind}_index_path")
-        mask_path = getattr(self, f"_{kind}_mask_path")
-        partition_by = self._LAYOUT_PARTITION_BY[kind]
-        meta_file = os.path.join(index_path, "_index_meta.json")
-        with open(meta_file) as fh:
-            meta = json.load(fh)
-        live = self._masked_layout_df(index_path, mask_path)
-        staging = index_path + "__consolidate_stage"
+        meta = self._fresh_meta(kind, f"consolidate_{kind}_index")
+        index_path = self._index_path(kind)
+        partition_by = self._INDEX_KINDS[kind][1]
+        live = self._masked_layout_df(kind)
+        staging = self._stage_path(kind)
         import shutil as _shutil
 
         _shutil.rmtree(staging, ignore_errors=True)
@@ -3044,7 +3061,7 @@ class VectorCollection:
         rows = int(self.catalog.spark.read.parquet(staging).count())
         _shutil.rmtree(index_path, ignore_errors=True)
         os.rename(staging, index_path)
-        _shutil.rmtree(mask_path, ignore_errors=True)
+        _shutil.rmtree(self._mask_path(kind), ignore_errors=True)
         meta.setdefault("consolidations", []).append(
             {
                 "at_version": self.catalog._load()[self.info.name][
@@ -3068,11 +3085,6 @@ class VectorCollection:
         """No-retrain LSH layout compaction — see _consolidate_layout."""
         return self._consolidate_layout("lsh")
 
-    def _ivf_layout_df(self, meta: dict | None = None) -> DataFrame:
-        return self._masked_layout_df(
-            self._ivf_index_path, self._ivf_mask_path, meta
-        )
-
     def search_ivf(
         self, query_vector: list[float], limit: int = 5, nprobe: int | None = None
     ) -> DataFrame:
@@ -3089,9 +3101,9 @@ class VectorCollection:
 
         from vector_database_spark.operators import ann
 
-        meta = self._ivf_meta_fresh("search_ivf")
+        meta = self._fresh_meta("ivf", "search_ivf")
         return ann.ivf_knn(
-            self._ivf_layout_df(meta),
+            self._masked_layout_df("ivf", meta),
             np.asarray(meta["centroids"], dtype=float),
             [float(x) for x in query_vector],
             k=limit,
@@ -3100,33 +3112,6 @@ class VectorCollection:
             emb_col="embedding",
             payload_cols=("payload",),
         )
-
-    def _ivf_meta_fresh(self, op: str) -> dict:
-        """Load the IVF index meta and enforce the coverage contract:
-        the index must cover the collection's current version (either the
-        base build or a later refresh_ivf_index)."""
-        if self.info.metric != "cosine":
-            raise ValueError(
-                f"{op} requires a cosine collection; "
-                f"{self.info.name!r} uses metric={self.info.metric!r}"
-            )
-        meta_path = os.path.join(self._ivf_index_path, "_index_meta.json")
-        if not os.path.exists(meta_path):
-            raise ValueError(
-                f"collection {self.info.name!r} has no IVF index; "
-                "call build_ivf_index() first"
-            )
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        current_version = self.catalog._load()[self.info.name]["version"]
-        covers = meta.get("covers_version", meta["built_at_version"])
-        if covers != current_version:
-            raise ValueError(
-                f"IVF index of {self.info.name!r} covers version "
-                f"{covers} but the collection is at {current_version}; "
-                "refresh_ivf_index() or rebuild with build_ivf_index()"
-            )
-        return meta
 
     def search_ivf_batch(
         self,
@@ -3144,9 +3129,9 @@ class VectorCollection:
 
         from vector_database_spark.operators import ann
 
-        meta = self._ivf_meta_fresh("search_ivf_batch")
+        meta = self._fresh_meta("ivf", "search_ivf_batch")
         return ann.ivf_knn_batch(
-            self._ivf_layout_df(meta),
+            self._masked_layout_df("ivf", meta),
             np.asarray(meta["centroids"], dtype=float),
             queries,
             k=limit,
@@ -3157,10 +3142,6 @@ class VectorCollection:
         )
 
     # -- IVF+PQ composite index (FAISS "IVFxx,PQyy" production shape) -------
-    @property
-    def _ivfpq_index_path(self) -> str:
-        return self.path + "__ivfpq"
-
     def build_ivfpq_index(
         self, n_centroids: int | None = None, m: int = 8, ksub: int = 16
     ) -> None:
@@ -3209,15 +3190,15 @@ class VectorCollection:
             build_mean, build_rows = float(agg["d"]), int(agg["n"])
             ann.ivf_write_partitioned(
                 codes.drop("__recon_err").withColumn("__seg", F.lit(0)),
-                self._ivfpq_index_path,
+                self._index_path("ivfpq"),
             )
         finally:
             codes.unpersist()
         import shutil as _shutil
 
-        _shutil.rmtree(self._ivfpq_mask_path, ignore_errors=True)
+        _shutil.rmtree(self._mask_path("ivfpq"), ignore_errors=True)
         self.catalog._write_index_meta(
-            self._ivfpq_index_path,
+            self._index_path("ivfpq"),
             {
                 "built_at_version": current_version,
                 "covers_version": current_version,
@@ -3242,41 +3223,6 @@ class VectorCollection:
                 "build_rows": build_rows,
             },
         )
-
-    @property
-    def _ivfpq_mask_path(self) -> str:
-        return self.path + "__ivfpq_mask"
-
-    def _ivfpq_layout_df(self, meta: dict | None = None) -> DataFrame:
-        return self._masked_layout_df(
-            self._ivfpq_index_path, self._ivfpq_mask_path, meta
-        )
-
-    def _ivfpq_meta_fresh(self, op: str) -> dict:
-        """Load the IVF+PQ index meta and enforce the coverage contract
-        (base build or a later refresh_ivfpq_index)."""
-        if self.info.metric != "cosine":
-            raise ValueError(
-                f"{op} requires a cosine collection; "
-                f"{self.info.name!r} uses metric={self.info.metric!r}"
-            )
-        meta_path = os.path.join(self._ivfpq_index_path, "_index_meta.json")
-        if not os.path.exists(meta_path):
-            raise ValueError(
-                f"collection {self.info.name!r} has no IVF+PQ index; "
-                "call build_ivfpq_index() first"
-            )
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        current_version = self.catalog._load()[self.info.name]["version"]
-        covers = meta.get("covers_version", meta["built_at_version"])
-        if covers != current_version:
-            raise ValueError(
-                f"IVF+PQ index of {self.info.name!r} covers version "
-                f"{covers} but the collection is at {current_version}; "
-                "refresh_ivfpq_index() or rebuild with build_ivfpq_index()"
-            )
-        return meta
 
     def refresh_ivfpq_index(self) -> int:
         """INCREMENTALLY fold the writes since the last build/refresh
@@ -3318,13 +3264,7 @@ class VectorCollection:
                 F.col("__recon_err").alias("__assign_dist"),
             )
 
-        return self._refresh_protocol(
-            "ivfpq",
-            self._ivfpq_index_path,
-            self._ivfpq_mask_path,
-            build_delta,
-            partition_by=("centroid_id",),
-        )
+        return self._refresh_protocol("ivfpq", build_delta)
 
     def search_ivfpq(
         self,
@@ -3344,7 +3284,7 @@ class VectorCollection:
 
         from vector_database_spark.operators import ann, knn
 
-        meta = self._ivfpq_meta_fresh("search_ivfpq")
+        meta = self._fresh_meta("ivfpq", "search_ivfpq")
         centroids = np.asarray(meta["centroids"], dtype=float)
         books = np.asarray(meta["codebooks"], dtype=float)
         nprobe = ann._auto_nprobe(nprobe, len(centroids))
@@ -3352,18 +3292,9 @@ class VectorCollection:
         cnorm = np.linalg.norm(centroids, axis=1) * np.linalg.norm(q)
         sims = centroids @ q / np.where(cnorm == 0, 1.0, cnorm)
         probe = [int(i) for i in np.argsort(-sims)[:nprobe]]
-        codes = self._ivfpq_layout_df(meta)
+        codes = self._masked_layout_df("ivfpq", meta)
         if shortlist is None:
-            # scanned-code estimate from the layout's parquet footers —
-            # deliberately the RAW (unmasked) count: footer metadata only,
-            # no mask join per search; superseded rows inflate it, which
-            # only widens the shortlist (the scale-safe direction)
-            raw_codes = self.catalog.spark.read.parquet(
-                self._ivfpq_index_path
-            ).count()
-            shortlist = ann._auto_shortlist(
-                None, int(raw_codes * nprobe / max(len(centroids), 1))
-            )
+            shortlist = self._ivfpq_auto_shortlist(codes, meta, nprobe)
         cell_codes = codes.filter(F.col("centroid_id").isin(probe))
         cand = ann.pq_knn(
             cell_codes,
@@ -3386,6 +3317,33 @@ class VectorCollection:
             payload_cols=("payload",),
         )
 
+    def _ivfpq_auto_shortlist(
+        self, layout: DataFrame, meta: dict, nprobe: int
+    ) -> int:
+        """The auto re-rank shortlist for ``nprobe`` cells, sized from a
+        scanned-code estimate: the layout's parquet footer row count,
+        deliberately RAW (unmasked) — footer metadata only, no mask join
+        per search; superseded rows inflate it, which only widens the
+        shortlist (the scale-safe direction). The count is kept next to
+        the cached layout for its generation, so only the first search
+        of a generation lists the layout's files for it; a ``layout``
+        that is not the cached one (a meta without a token) counts on
+        every call."""
+        from vector_database_spark.operators import ann
+
+        path = self._index_path("ivfpq")
+        cached = self.catalog._layouts.get(path)
+        mine = cached is not None and cached[1] is layout
+        if mine and cached[2] is not None:
+            raw_codes = cached[2]
+        else:
+            raw_codes = self.catalog.spark.read.parquet(path).count()
+            if mine:
+                self.catalog._layouts[path] = (cached[0], layout, raw_codes)
+        return ann._auto_shortlist(
+            None, int(raw_codes * nprobe / max(len(meta["centroids"]), 1))
+        )
+
     def search_ivfpq_batch(
         self,
         queries: list[tuple[int, list[float]]],
@@ -3404,24 +3362,18 @@ class VectorCollection:
 
         from vector_database_spark.operators import ann
 
-        meta = self._ivfpq_meta_fresh("search_ivfpq_batch")
+        meta = self._fresh_meta("ivfpq", "search_ivfpq_batch")
         centroids = np.asarray(meta["centroids"], dtype=float)
+        codes = self._masked_layout_df("ivfpq", meta)
         if shortlist is None:
             # mirror the single-query sizing (r10 fix, extended to the
             # batch path per ADVICE r10): ivfpq_knn_batch's own auto-
             # shortlist would count() the MASKED multi-segment layout —
-            # a mask join per batch call. The raw parquet footer count is
-            # metadata-only; superseded rows inflate it, which only
-            # widens the shortlist (the scale-safe direction).
-            raw_codes = self.catalog.spark.read.parquet(
-                self._ivfpq_index_path
-            ).count()
+            # a mask join per batch call
             nprobe = ann._auto_nprobe(nprobe, len(centroids))
-            shortlist = ann._auto_shortlist(
-                None, int(raw_codes * nprobe / max(len(centroids), 1))
-            )
+            shortlist = self._ivfpq_auto_shortlist(codes, meta, nprobe)
         return ann.ivfpq_knn_batch(
-            self._ivfpq_layout_df(meta),
+            codes,
             centroids,
             np.asarray(meta["codebooks"], dtype=float),
             self.df().select("id", "embedding", "payload"),
@@ -3436,10 +3388,6 @@ class VectorCollection:
         )
 
     # -- multi-table LSH index (signatures at ingest) -----------------------
-    @property
-    def _lsh_index_path(self) -> str:
-        return self.path + "__lsh"
-
     def build_lsh_index(self, bits: int | None = None, tables: int = 4) -> None:
         """Materialize the multi-table LSH index for the CURRENT live
         state (operators/ann.py::lsh_write_partitioned): one row copy per
@@ -3485,12 +3433,12 @@ class VectorCollection:
             payload_cols=("payload",),
         ).withColumn("__seg", F.lit(0)).repartition("table", "sig").write.mode(
             "overwrite"
-        ).partitionBy("table", "sig").parquet(self._lsh_index_path)
+        ).partitionBy("table", "sig").parquet(self._index_path("lsh"))
         import shutil as _shutil
 
-        _shutil.rmtree(self._lsh_mask_path, ignore_errors=True)
+        _shutil.rmtree(self._mask_path("lsh"), ignore_errors=True)
         self.catalog._write_index_meta(
-            self._lsh_index_path,
+            self._index_path("lsh"),
             {
                 "built_at_version": current_version,
                 "covers_version": current_version,
@@ -3501,10 +3449,6 @@ class VectorCollection:
             },
         )
 
-    @property
-    def _lsh_mask_path(self) -> str:
-        return self.path + "__lsh_mask"
-
     def refresh_lsh_index(self) -> int:
         """INCREMENTALLY fold the writes since the last build/refresh into
         the persisted LSH index — the LSH twin of :meth:`refresh_ivf_index`
@@ -3513,7 +3457,7 @@ class VectorCollection:
         _hyperplanes), so delta rows hash into exactly the buckets probes
         will look in; they append as a new ``__seg`` under their
         (table, sig) partitions and every written-or-deleted id gets a
-        (id, seg) mask row. ``_lsh_layout_df`` resolves segments at search
+        (id, seg) mask row. ``_masked_layout_df`` resolves segments at search
         exactly like the IVF layout. Unlike IVF there is no centroid-drift
         caveat: the hyperplanes never depended on the data, so a refreshed
         LSH index has the SAME recall properties as a rebuild at the same
@@ -3539,45 +3483,7 @@ class VectorCollection:
                 payload_cols=("payload",),
             ).withColumn("__seg", F.lit(seg))
 
-        return self._refresh_protocol(
-            "lsh",
-            self._lsh_index_path,
-            self._lsh_mask_path,
-            build_delta,
-            partition_by=("table", "sig"),
-        )
-
-    def _lsh_layout_df(self, meta: dict | None = None) -> DataFrame:
-        return self._masked_layout_df(
-            self._lsh_index_path, self._lsh_mask_path, meta
-        )
-
-    def _lsh_meta_fresh(self, op: str) -> dict:
-        """Load the LSH index meta and enforce the coverage contract (the
-        base build or a later refresh_lsh_index must cover the current
-        collection version)."""
-        if self.info.metric != "cosine":
-            raise ValueError(
-                f"{op} requires a cosine collection; "
-                f"{self.info.name!r} uses metric={self.info.metric!r}"
-            )
-        meta_path = os.path.join(self._lsh_index_path, "_index_meta.json")
-        if not os.path.exists(meta_path):
-            raise ValueError(
-                f"collection {self.info.name!r} has no LSH index; "
-                "call build_lsh_index() first"
-            )
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        current_version = self.catalog._load()[self.info.name]["version"]
-        covers = meta.get("covers_version", meta["built_at_version"])
-        if covers != current_version:
-            raise ValueError(
-                f"LSH index of {self.info.name!r} covers version "
-                f"{covers} but the collection is at {current_version}; "
-                "refresh_lsh_index() or rebuild with build_lsh_index()"
-            )
-        return meta
+        return self._refresh_protocol("lsh", build_delta)
 
     def search_lsh(
         self, query_vector: list[float], limit: int = 5, max_hamming: int = 1
@@ -3590,9 +3496,9 @@ class VectorCollection:
         coverage without a rebuild). Returns (id, payload, score)."""
         from vector_database_spark.operators import ann
 
-        meta = self._lsh_meta_fresh("search_lsh")
+        meta = self._fresh_meta("lsh", "search_lsh")
         return ann.lsh_knn_pruned_df(
-            self._lsh_layout_df(meta),
+            self._masked_layout_df("lsh", meta),
             [float(x) for x in query_vector],
             k=limit,
             bits=meta["bits"],
@@ -3602,11 +3508,6 @@ class VectorCollection:
             emb_col="embedding",
             payload_cols=("payload",),
         )
-
-    # priority order for auto-routing: measured recall@5 on the bench
-    # fixture (BENCH_LOCAL.json ann_operating_points / recall_at_5) —
-    # nsw 1.0, lsh 0.90, ivf 0.88, ivfpq 0.82 at their default points
-    _INDEX_ROUTE_PRIORITY = ("nsw", "lsh", "ivf", "ivfpq")
 
     def index_status(self) -> dict[str, dict]:
         """Freshness of every persisted ANN index of this collection:
@@ -3619,14 +3520,9 @@ class VectorCollection:
         the next search skips the file listing."""
         current = self.catalog._load()[self.info.name]["version"]
         out: dict[str, dict] = {}
-        for kind, path in (
-            ("nsw", self._nsw_index_path),
-            ("lsh", self._lsh_index_path),
-            ("ivf", self._ivf_index_path),
-            ("ivfpq", self._ivfpq_index_path),
-        ):
-            meta_path = os.path.join(path, "_index_meta.json")
-            if not os.path.exists(meta_path):
+        for kind in self._INDEX_KINDS:
+            meta = self._index_meta(kind)
+            if meta is None:
                 out[kind] = {
                     "exists": False,
                     "built_at_version": None,
@@ -3634,11 +3530,9 @@ class VectorCollection:
                     "layout_cached": False,
                 }
                 continue
-            with open(meta_path) as fh:
-                meta = json.load(fh)
             built = meta["built_at_version"]
             covers = meta.get("covers_version", built)
-            cached = self.catalog._layouts.get(path)
+            cached = self.catalog._layouts.get(self._index_path(kind))
             entry = {
                 "exists": True,
                 "built_at_version": built,
@@ -3689,7 +3583,7 @@ class VectorCollection:
         if self.info.metric != "cosine":
             return "exact"
         status = self.index_status()
-        for kind in self._INDEX_ROUTE_PRIORITY:
+        for kind in self._INDEX_KINDS:
             if status[kind]["fresh"]:
                 return kind
         return "exact"
@@ -3729,33 +3623,26 @@ class VectorCollection:
         ivfpq batches carry per-query ADC lookup tables on the broadcast
         rows); otherwise the exact adaptive batch plan runs
         (:meth:`search_batch`, window vs two-phase by size). Returns
-        (qid, id, score)."""
-        status = self.index_status()
-        if self.info.metric == "cosine" and status["nsw"]["fresh"]:
+        (qid, id, score). Routes through :meth:`route_for_search`, so
+        single and batch queries always pick the same index."""
+        route = self.route_for_search()
+        if route == "exact":
+            out = self.search_batch(queries, limit=limit)
+        elif route == "nsw":
             from vector_database_spark.operators import ann
 
-            return ann.nsw_search_layout(
-                self._nsw_layout_df(self._nsw_meta_fresh("search_auto_batch")),
+            out = ann.nsw_search_layout(
+                self._masked_layout_df(
+                    "nsw", self._fresh_meta("nsw", "search_auto_batch")
+                ),
                 [(int(i), [float(x) for x in v]) for i, v in queries],
                 k=limit,
                 id_col="id",
                 emb_col="embedding",
-            ).select("qid", "id", "score")
-        if self.info.metric == "cosine" and status["lsh"]["fresh"]:
-            return self.search_lsh_batch(queries, limit=limit).select(
-                "qid", "id", "score"
             )
-        if self.info.metric == "cosine" and status["ivf"]["fresh"]:
-            return self.search_ivf_batch(queries, limit=limit).select(
-                "qid", "id", "score"
-            )
-        if self.info.metric == "cosine" and status["ivfpq"]["fresh"]:
-            return self.search_ivfpq_batch(queries, limit=limit).select(
-                "qid", "id", "score"
-            )
-        return self.search_batch(queries, limit=limit).select(
-            "qid", "id", "score"
-        )
+        else:
+            out = getattr(self, f"search_{route}_batch")(queries, limit=limit)
+        return out.select("qid", "id", "score")
 
     def search_lsh_batch(
         self,
@@ -3765,14 +3652,14 @@ class VectorCollection:
     ) -> DataFrame:
         """Batch search over the persisted LSH index: ONE scan of the
         union of every query's probe buckets (operators/ann.py::
-        lsh_knn_batch), map-side per-query probe filtering, row-identical
+        lsh_knn_batch_df), map-side per-query probe filtering, row-identical
         to per-query :meth:`search_lsh`. Same coverage contract (build or
         refresh). Returns (qid, id, payload, score)."""
         from vector_database_spark.operators import ann
 
-        meta = self._lsh_meta_fresh("search_lsh_batch")
+        meta = self._fresh_meta("lsh", "search_lsh_batch")
         return ann.lsh_knn_batch_df(
-            self._lsh_layout_df(meta),
+            self._masked_layout_df("lsh", meta),
             queries,
             k=limit,
             bits=meta["bits"],

@@ -315,34 +315,6 @@ def lsh_long_form(
     )
 
 
-def lsh_knn_pruned(
-    spark,
-    path: str,
-    query_vector: list[float],
-    k: int = 5,
-    bits: int = LSH_BITS,
-    tables: int = LSH_TABLES,
-    max_hamming: int = 1,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    payload_cols: tuple[str, ...] = ("label",),
-) -> DataFrame:
-    """lsh_knn against the partitioned layout written by
-    :func:`lsh_write_partitioned` (see :func:`lsh_knn_pruned_df` for the
-    DataFrame form — the catalog passes its mask-resolved layout there)."""
-    return lsh_knn_pruned_df(
-        spark.read.parquet(path),
-        query_vector,
-        k=k,
-        bits=bits,
-        tables=tables,
-        max_hamming=max_hamming,
-        id_col=id_col,
-        emb_col=emb_col,
-        payload_cols=payload_cols,
-    )
-
-
 def lsh_knn_pruned_df(
     df: DataFrame,
     query_vector: list[float],
@@ -354,9 +326,12 @@ def lsh_knn_pruned_df(
     emb_col: str = "embedding",
     payload_cols: tuple[str, ...] = ("label",),
 ) -> DataFrame:
-    """lsh_knn against a (table, sig) long-form layout DataFrame: the
-    per-table probe sets land on the ``table``/``sig`` columns — PARTITION
-    pruning when the input is the persisted layout (verify:
+    """lsh_knn against a (table, sig) long-form layout DataFrame — the
+    in-memory :func:`lsh_long_form`, the partitioned layout written by
+    :func:`lsh_write_partitioned` (``spark.read.parquet(path)``), or the
+    catalog's mask-resolved layout: the per-table probe sets land on the
+    ``table``/``sig`` columns — PARTITION pruning when the input is the
+    persisted layout (verify:
     PartitionFilters in .explain; the predicate pushes through the
     catalog's mask left-join since it references only the scan side) —
     candidates are deduped by id (a row collides in several tables), then
@@ -376,47 +351,6 @@ def lsh_knn_pruned_df(
     return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
 
 
-def lsh_knn_batch(
-    spark,
-    path: str,
-    queries: list[tuple[int, list[float]]],
-    k: int = 5,
-    bits: int = LSH_BITS,
-    tables: int = LSH_TABLES,
-    max_hamming: int = 1,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    payload_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Batch LSH over the partitioned layout: ONE scan of the union of
-    every query's probe buckets, instead of N per-query jobs.
-
-    The scan predicate is per-table ``(table == t AND sig IN
-    union_of_probes_t)`` — still (table, sig) PARTITION pruning. Each
-    (query, probed bucket) becomes ONE broadcast row keyed by the flat
-    ``t·2^bits + sig`` bucket id, and an EQUI-JOIN on that key pairs every
-    candidate with exactly the queries that probed its bucket — the first
-    cut used crossJoin + array_contains, which multiplies every scanned
-    row by |queries| before filtering and measured SLOWER than sequential
-    per-query search (tools/stress_batch_index.py; the LSH layout holds
-    ``tables`` copies per vector, so the blowup is 4·|queries|×).
-    Per-table duplicate copies of a candidate dedupe per query before the
-    exact cosine re-rank. Row-identical to per-query
-    :func:`lsh_knn_pruned` at the same operating point (asserted in
-    tests)."""
-    return lsh_knn_batch_df(
-        spark.read.parquet(path),
-        queries,
-        k=k,
-        bits=bits,
-        tables=tables,
-        max_hamming=max_hamming,
-        id_col=id_col,
-        emb_col=emb_col,
-        payload_cols=payload_cols,
-    )
-
-
 def lsh_knn_batch_df(
     df: DataFrame,
     queries: list[tuple[int, list[float]]],
@@ -428,12 +362,25 @@ def lsh_knn_batch_df(
     emb_col: str = "embedding",
     payload_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """:func:`lsh_knn_batch` over an in-memory (table, sig) long-form
-    index DataFrame (:func:`lsh_long_form`) instead of the persisted
-    layout — same probe-union scan predicate and per-(query, bucket)
-    broadcast equi-join; the (table, sig) filter is a plain column
-    predicate here and PARTITION pruning when the input is the
-    at-ingest parquet layout."""
+    """Batch LSH over a (table, sig) long-form index DataFrame — the
+    in-memory :func:`lsh_long_form` or the partitioned layout
+    (``spark.read.parquet(path)``): ONE scan of the union of every
+    query's probe buckets, instead of N per-query jobs.
+
+    The scan predicate is per-table ``(table == t AND sig IN
+    union_of_probes_t)`` — a plain column predicate on the long form and
+    (table, sig) PARTITION pruning on the at-ingest parquet layout. Each
+    (query, probed bucket) becomes ONE broadcast row keyed by the flat
+    ``t·2^bits + sig`` bucket id, and an EQUI-JOIN on that key pairs every
+    candidate with exactly the queries that probed its bucket — the first
+    cut used crossJoin + array_contains, which multiplies every scanned
+    row by |queries| before filtering and measured SLOWER than sequential
+    per-query search (tools/stress_batch_index.py; the LSH layout holds
+    ``tables`` copies per vector, so the blowup is 4·|queries|×).
+    Per-table duplicate copies of a candidate dedupe per query before the
+    exact cosine re-rank. Row-identical to per-query
+    :func:`lsh_knn_pruned_df` at the same operating point (asserted in
+    tests)."""
     spark = df.sparkSession
     if not queries:
         return df.select(
@@ -584,26 +531,6 @@ def ivf_write_partitioned(assigned: DataFrame, path: str) -> None:
     ).parquet(path)
 
 
-def ivf_knn_pruned(
-    spark,
-    path: str,
-    centroids: np.ndarray,
-    query_vector: list[float],
-    k: int = 5,
-    nprobe: int | None = None,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    payload_cols: tuple[str, ...] = ("label",),
-) -> DataFrame:
-    """ivf_knn against the partitioned layout: the centroid filter is a
-    partition predicate (verify: PartitionFilters in .explain)."""
-    assigned = spark.read.parquet(path)
-    return ivf_knn(
-        assigned, centroids, query_vector, k=k, nprobe=nprobe,
-        id_col=id_col, emb_col=emb_col, payload_cols=payload_cols,
-    )
-
-
 def ivf_knn(
     assigned: DataFrame,
     centroids: np.ndarray,
@@ -620,8 +547,10 @@ def ivf_knn(
     from the centroid count and a target scan fraction
     (:func:`_auto_nprobe`) — the scale-aware twin of NSW's ``_auto_ef``;
     an explicit int pins the operating point. At scale ``centroid_id`` is
-    the partition column → partition pruning reads nprobe/n_centroids of
-    the data.
+    the partition column: over the layout :func:`ivf_write_partitioned`
+    wrote (``spark.read.parquet(path)``) the centroid filter is a
+    partition predicate (verify: PartitionFilters in .explain), reading
+    nprobe/n_centroids of the data.
     """
     nprobe = _auto_nprobe(nprobe, len(centroids))
     q = np.asarray(query_vector, dtype=float)
@@ -658,7 +587,7 @@ def ivf_knn_batch(
     cell) pair becomes ONE broadcast row, and the EQUI-JOIN on
     ``centroid_id`` pairs every scanned index row with exactly the
     queries that probed its cell — no pair ever materializes for an
-    unprobed cell (same pattern as :func:`lsh_knn_batch`; the first cut
+    unprobed cell (same pattern as :func:`lsh_knn_batch_df`; the first cut
     crossJoined every scanned row against all |queries| and filtered
     after, which measured SLOWER than sequential). ``nprobe=None``
     derives the probe count from the centroid count (:func:`_auto_nprobe`).
@@ -1796,27 +1725,6 @@ def nsw_index_write(
         emb_col=emb_col,
     )
     built.write.mode("overwrite").partitionBy("_b").parquet(path)
-
-
-def nsw_search_index(
-    spark,
-    path: str,
-    queries: list[tuple[int, list[float]]],
-    k: int = 5,
-    ef: int | None = None,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> DataFrame:
-    """Beam-search a persisted NSW index (written by nsw_index_write) —
-    :func:`nsw_search_layout` over the raw parquet layout."""
-    return nsw_search_layout(
-        spark.read.parquet(path),
-        queries,
-        k=k,
-        ef=ef,
-        id_col=id_col,
-        emb_col=emb_col,
-    )
 
 
 def nsw_search_layout(

@@ -2583,7 +2583,7 @@ def q_knn_lsh_batch(spark, sf_dir):
     ONE scan of the union of their per-table probe buckets
     (ann.lsh_knn_batch_df over the (table, sig) long-form index) — the
     same per-(query, bucket) broadcast equi-join as the persisted-layout
-    path, row-identical to per-query lsh_knn_pruned (asserted in tests).
+    path, row-identical to per-query lsh_knn_pruned_df (asserted in tests).
     Rows-only; recall equals q_knn_lsh's (identical probes + re-rank)."""
     emb = _t(spark, sf_dir, "embeddings")
     long_form = ann.lsh_long_form(emb, dim=64, payload_cols=("label",))
@@ -2599,7 +2599,7 @@ def q_knn_lsh_batch(spark, sf_dir):
 def q_knn_nsw_batch(spark, sf_dir):
     """B8 batch form, NSW family (round-7 directive 8): the PERSISTED
     graph layout shape — ann.nsw_index_write materializes per-bucket
-    graphs (adjacency stored as id lists), ann.nsw_search_index answers
+    graphs (adjacency stored as id lists), ann.nsw_search_layout answers
     the whole 8-query batch in one bucket pass with zero build cost per
     query. The layout is rewritten (mode=overwrite) each call so results
     never come from a stale fixture. Rows-only; row-identical to the
@@ -2624,7 +2624,7 @@ def q_knn_nsw_batch(spark, sf_dir):
         emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding").collect()
     )
     queries = [(r.vec_id, list(r.embedding)) for r in qrows]
-    return ann.nsw_search_index(spark, path, queries, k=5)
+    return ann.nsw_search_layout(spark.read.parquet(path), queries, k=5)
 
 
 def q_knn_ivfpq_batch(spark, sf_dir):
