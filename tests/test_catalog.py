@@ -9,6 +9,7 @@ Known-answer tests mirroring the reference semantics:
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -251,8 +252,20 @@ def test_drop(catalog):
     catalog.drop_collection("c6")
     assert not catalog.collection_exists("c6")
 
-def _on_disk(catalog, prefix):
-    return sorted(d for d in os.listdir(catalog.root) if d.startswith(prefix))
+def _on_disk(catalog, name):
+    """The directories in collection ``name``'s home; [] when it has none."""
+    home = os.path.join(catalog.root, name)
+    return sorted(os.listdir(home)) if os.path.isdir(home) else []
+
+
+def _tree(root):
+    """{relative path: bytes} of every file under ``root``."""
+    out = {}
+    for dp, _dirs, files in os.walk(root):
+        for f in files:
+            with open(os.path.join(dp, f), "rb") as fh:
+                out[os.path.relpath(os.path.join(dp, f), root)] = fh.read()
+    return out
 
 
 def test_drop_deletes_points_and_every_index(catalog, spark):
@@ -275,7 +288,7 @@ def test_drop_deletes_points_and_every_index(catalog, spark):
     assert all(st["exists"] for st in col.index_status().values())
     # what a consolidation that crashed before its swap leaves behind
     for kind in ("nsw", "ivf"):
-        os.makedirs(f"{catalog.root}/dd__{kind}__consolidate_stage")
+        os.makedirs(col.path + f"__{kind}__consolidate_stage")
     catalog.update_aliases(create={"dd_alias": "dd"})
 
     catalog.drop_collection("dd")
@@ -297,8 +310,90 @@ def test_drop_keeps_collection_whose_name_extends_it(catalog, spark):
     col.upsert(_points(spark, [(3, [1, 1], 0)]))
     catalog.drop_collection("sb")
     catalog.create_collection("sb", dim=2)
-    assert _on_disk(catalog, "sb") == ["sb__ivf", "sb__ivf__tombstones"]
+    assert _on_disk(catalog, "sb") == []
+    assert _on_disk(catalog, "sb__ivf") == ["points", "points__tombstones"]
     assert [r["id"] for r in catalog.collection("sb__ivf").df().collect()] == [1]
+
+
+def test_collection_named_like_an_index_dir_coexists(catalog, spark):
+    """A collection named ``x__ivf`` and the IVF index of ``x`` live in
+    different homes: building the index leaves the collection's points
+    alone, and dropping ``x`` leaves ``x__ivf`` intact."""
+    sib = catalog.create_collection("x__ivf", dim=2)
+    sib.upsert(_points(spark, [(i, [1, i], 0) for i in range(10)]))
+    col = catalog.create_collection("x", dim=2)
+    col.upsert(_points(spark, [(i, [i, 1], 0) for i in range(20, 26)]))
+    col.build_ivf_index(n_centroids=2)
+    assert catalog.collection("x__ivf").count() == 10
+    catalog.drop_collection("x")
+    assert catalog.collection("x__ivf").count() == 10
+    assert _on_disk(catalog, "x__ivf") == ["points"]
+
+
+def test_drop_deletes_what_a_crashed_refresh_or_consolidation_left(
+    catalog, spark
+):
+    """A refresh that crashed leaves its ``__stage_seg<n>`` dir, a
+    consolidation its ``__consolidate_stage`` dir; both go with the
+    collection, so the name created again starts empty."""
+    col = catalog.create_collection("cx", dim=2)
+    col.upsert(_points(spark, [(1, [1, 0], 0), (2, [0, 1], 1), (3, [1, 1], 2)]))
+    col.build_ivf_index(n_centroids=2)
+    left = [col.path + "__ivf__stage_seg1", col.path + "__ivf__consolidate_stage"]
+    for d in left:
+        os.makedirs(d)
+    catalog.drop_collection("cx")
+    assert not any(os.path.exists(d) for d in left)
+    col = catalog.create_collection("cx", dim=2)
+    assert col.count() == 0
+    assert not any(st["exists"] for st in col.index_status().values())
+
+
+def test_names_of_the_catalogs_own_entries_are_refused(catalog, spark):
+    """Names starting with ``_`` or ``.`` are the catalog's own (its JSON
+    keys, ``_catalog.json``) or not one plain directory: creating or
+    dropping one raises and leaves the catalog file byte-identical."""
+    catalog.create_collection("docs", dim=3)
+    catalog.update_aliases(create={"latest": "docs"})
+    path = os.path.join(catalog.root, "_catalog.json")
+    with open(path, "rb") as fh:
+        before = fh.read()
+    for bad in ("__aliases__", "_layout", "_catalog.json", ".hidden"):
+        with pytest.raises(ValueError, match="invalid collection name"):
+            catalog.create_collection(bad, dim=3)
+        with pytest.raises(ValueError, match="invalid collection name"):
+            catalog.drop_collection(bad)
+        with open(path, "rb") as fh:
+            assert fh.read() == before, bad
+    assert catalog.list_aliases() == {"latest": "docs"}
+    assert catalog.list_collections() == ["docs"]
+
+
+def test_root_in_an_older_layout_is_refused_untouched(spark, tmp_path):
+    """A root whose catalog holds collections but does not record its
+    layout was written by an older version, which kept a collection's
+    points directly in ``<root>/<name>`` and its other directories side
+    by side at the root; opening it raises and changes no byte. A root
+    whose catalog holds no collection opens, and records the layout."""
+    old = str(tmp_path / "older")
+    _points(spark, [(1, [1, 0], 0)]).select(
+        "*", F.lit(1).cast("long").alias("version"), F.lit(1).alias("bucket")
+    ).write.partitionBy("bucket").parquet(os.path.join(old, "docs"))
+    with open(os.path.join(old, "_catalog.json"), "w") as fh:
+        json.dump({"docs": {"dim": 2, "metric": "cosine", "version": 1}}, fh)
+    before = _tree(old)
+    with pytest.raises(ValueError, match="export_points"):
+        Catalog(spark, old)
+    assert _tree(old) == before
+
+    empty = str(tmp_path / "no_collections")
+    os.makedirs(empty)
+    with open(os.path.join(empty, "_catalog.json"), "w") as fh:
+        json.dump({"__aliases__": {}}, fh)
+    Catalog(spark, empty).create_collection("fresh", dim=2)
+    with open(os.path.join(empty, "_catalog.json")) as fh:
+        assert json.load(fh)["_layout"] == "home-dir"
+    assert Catalog(spark, empty).list_collections() == ["fresh"]
 
 
 def test_drop_of_a_bad_or_unknown_name_deletes_nothing(catalog, spark):
@@ -333,7 +428,7 @@ def test_create_clears_dirs_of_an_interrupted_drop(catalog, spark):
         cat = catalog._load()
         del cat["cr"]
         catalog._save(cat)
-    assert _on_disk(catalog, "cr") == ["cr", "cr__ivf", "cr__tombstones"]
+    assert _on_disk(catalog, "cr") == ["points", "points__ivf", "points__tombstones"]
     col = catalog.create_collection("cr", dim=2)
     assert col.count() == 0
     assert not col.index_status()["ivf"]["exists"]
@@ -1801,49 +1896,6 @@ def test_ivf_refresh_retry_does_not_duplicate(spark, tmp_path):
     assert got == exact
 
 
-def test_ivf_refresh_refuses_legacy_layout(spark, tmp_path):
-    """r8 ADVICE: a pre-segment layout (meta without next_seg, base files
-    without __seg) must REFUSE refresh — appending seg-stamped files into
-    it leaves a mixed schema that plain spark.read.parquet resolves from
-    an arbitrary file, silently dropping the refreshed rows from search."""
-    import json as _json
-    import os as _os
-
-    import pytest as _pytest
-
-    from vector_database_spark.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "cat_ivflegacy"))
-    cat.create_collection("ivfleg", dim=8)
-    col = cat.collection("ivfleg")
-
-    def vec(i):
-        return [((i * 911 + j * 127) % 997) / 498.0 - 1.0 for j in range(8)]
-
-    col.upsert(
-        spark.createDataFrame(
-            [(i, vec(i), {"i": str(i)}) for i in range(60)],
-            "id long, embedding array<float>, payload map<string,string>",
-        )
-    )
-    col.build_ivf_index(n_centroids=4)
-    # devolve the meta to the pre-segment shape
-    meta_path = _os.path.join(col._index_path("ivf"), "_index_meta.json")
-    with open(meta_path) as fh:
-        meta = _json.load(fh)
-    meta.pop("next_seg")
-    with open(meta_path, "w") as fh:
-        _json.dump(meta, fh)
-    col.upsert(
-        spark.createDataFrame(
-            [(99, vec(99), {"i": "99"})],
-            "id long, embedding array<float>, payload map<string,string>",
-        )
-    )
-    with _pytest.raises(ValueError, match="predates the segment scheme"):
-        col.refresh_ivf_index()
-
-
 def test_lsh_refresh_incremental(spark, tmp_path):
     """r8 directive 4: refresh_lsh_index folds writes since the build into
     the persisted (table, sig) layout WITHOUT a rebuild — delta rows hash
@@ -2374,7 +2426,7 @@ def test_lifecycle_random_ops_serving_invariants(spark, tmp_path, monkeypatch):
             try:
                 getattr(col, f"refresh_{kind}_index")()
             except ValueError:
-                pass  # no index / legacy / folded — legitimate refusals
+                pass  # no index / folded — legitimate refusals
 
     def op_compact():
         col.compact()
@@ -2412,7 +2464,7 @@ def test_lifecycle_random_ops_serving_invariants(spark, tmp_path, monkeypatch):
 
 # ---------------------------------------------------------------------------
 # r9: ADVICE fixes — hint-race-safe compact, narrow live-rows except,
-# crash-safe tombstone clear ordering, best-effort policy, legacy metas
+# crash-safe tombstone clear ordering, best-effort policy
 # ---------------------------------------------------------------------------
 def test_compact_ignores_stale_live_rows_hint(spark, tmp_path):
     """r9 (r8 ADVICE, high): the policy computes its live count OUTSIDE
@@ -2567,55 +2619,6 @@ def test_write_paths_survive_policy_failures(spark, tmp_path, monkeypatch):
         v2 = col.delete(point_ids=[1])
     assert cat._load()["be"]["version"] == v2
     assert col.df().count() == 0
-
-
-def test_optimize_rebuilds_legacy_meta_at_original_params(spark, tmp_path):
-    """r9 (r8 ADVICE, low): legacy (pre build_params) metas persisted the
-    caller knobs at the top level; optimize() must rebuild at THOSE, not
-    at the builder defaults — a tables=3 LSH index must come back
-    tables=3."""
-    import json as _json
-    import os as _os
-
-    from vector_database_spark.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "cat_legacy"))
-    col = cat.create_collection("lg", dim=4, auto_compact=False)
-
-    def vec(i):
-        return [float((i * 31 + j * 7) % 11) + 1.0 for j in range(4)]
-
-    def pts(ids):
-        return spark.createDataFrame(
-            [(i, vec(i), {"i": str(i)}) for i in ids],
-            "id long, embedding array<float>, payload map<string,string>",
-        )
-
-    col.upsert(pts(range(30)))
-    col.build_lsh_index(bits=6, tables=3)
-    col.upsert(pts(range(30, 40)))  # stale now
-
-    # rewrite the meta as a LEGACY one: top-level knobs only
-    meta_path = _os.path.join(col._index_path("lsh"), "_index_meta.json")
-    with open(meta_path) as fh:
-        meta = _json.load(fh)
-    legacy = {
-        "built_at_version": meta["built_at_version"],
-        "bits": 6,
-        "tables": 3,
-    }
-    with open(meta_path, "w") as fh:
-        _json.dump(legacy, fh)
-
-    report = col.optimize()
-    assert report["lsh"] == "rebuilt"
-    with open(meta_path) as fh:
-        rebuilt = _json.load(fh)
-    assert rebuilt["build_params"]["tables"] == 3, (
-        "legacy meta rebuilt at default tables — recall silently changed"
-    )
-    assert rebuilt["build_params"]["bits"] == 6
-    assert col.search_lsh(vec(5), limit=1).collect()[0]["id"] == 5
 
 
 def test_ivf_drift_detection_and_rebuild_escalation(spark, tmp_path):
@@ -3656,7 +3659,7 @@ def test_multi_segment_refresh_chains(spark, tmp_path):
 
     segs = {
         r["__seg"]
-        for r in col._masked_layout_df("nsw").select("__seg").distinct().collect()
+        for r in col._read_masked_layout("nsw").select("__seg").distinct().collect()
     }
     assert segs == {0, 1, 2}
     # consolidation folds it back to one
@@ -3774,7 +3777,7 @@ def test_nsw_consolidation_merges_segments_and_matches_rebuild(
     assert rep["nsw"] == "consolidated", rep
 
     # structurally a rebuild: one segment, base bucket range, no masks
-    layout = col._masked_layout_df("nsw")
+    layout = col._read_masked_layout("nsw")
     assert {r["__seg"] for r in layout.select("__seg").distinct().collect()} == {0}
     assert {
         r["_b"] for r in layout.select("_b").distinct().collect()
@@ -3902,9 +3905,9 @@ def test_flat_layout_mask_consolidation(spark, tmp_path):
     }
     assert after == drift_before
     # layouts hold exactly the live rows, searches stay correct
-    assert col._masked_layout_df("ivf").count() == 100
-    assert col._masked_layout_df("ivfpq").count() == 100
-    assert col._masked_layout_df("lsh").count() == 200  # 2 tables x 100 live
+    assert col._read_masked_layout("ivf").count() == 100
+    assert col._read_masked_layout("ivfpq").count() == 100
+    assert col._read_masked_layout("lsh").count() == 200  # 2 tables x 100 live
     for search in (
         lambda q: col.search_ivf(q, limit=1, nprobe=4),
         lambda q: col.search_lsh(q, limit=1),
@@ -3912,12 +3915,23 @@ def test_flat_layout_mask_consolidation(spark, tmp_path):
     ):
         assert [r["id"] for r in search(vec(7)).collect()] == [7]
         assert [r["id"] for r in search(vec(80)).collect()] == [80]
-    # a later write still refreshes into fresh segment ids
+    # a later write still refreshes into fresh segment ids, and each
+    # family's public consolidation folds that segment in again
     col.upsert(pts([500]))
     assert col.refresh_ivf_index() == 1
-    assert [
-        r["id"] for r in col.search_ivf(vec(500), limit=1, nprobe=4).collect()
-    ] == [500]
+    assert col.refresh_lsh_index() == 2
+    assert col.refresh_ivfpq_index() == 1
+    for kind, consolidate, search, rows in (
+        ("ivf", col.consolidate_ivf_index,
+         lambda q: col.search_ivf(q, limit=1, nprobe=4), 101),
+        ("lsh", col.consolidate_lsh_index,
+         lambda q: col.search_lsh(q, limit=1), 202),
+        ("ivfpq", col.consolidate_ivfpq_index,
+         lambda q: col.search_ivfpq(q, limit=1, nprobe=4), 101),
+    ):
+        assert consolidate() == rows, kind
+        assert not os.path.exists(col._mask_path(kind))
+        assert [r["id"] for r in search(vec(500)).collect()] == [500], kind
 
 
 def test_nsw_refresh_respects_pinned_wide_bucket_layout(spark, tmp_path):
@@ -3955,7 +3969,7 @@ def test_nsw_refresh_respects_pinned_wide_bucket_layout(spark, tmp_path):
     # beyond every possible base bucket id
     seg_buckets = {
         r["_b"]
-        for r in col._masked_layout_df("nsw")
+        for r in col._read_masked_layout("nsw")
         .filter(F.col("__seg") == 1)
         .select("_b")
         .distinct()

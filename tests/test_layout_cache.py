@@ -101,7 +101,7 @@ def test_warm_ivf_search_skips_layout_listing(spark, ivf):
 
     meta = _meta(col._index_path("ivf"))
     bypassed = ann.ivf_knn(
-        col._masked_layout_df("ivf"),  # no meta: read uncached
+        col._read_masked_layout("ivf"),
         np.asarray(meta["centroids"], dtype=float),
         q,
         k=5,
@@ -138,7 +138,7 @@ def test_warm_ivfpq_search_keeps_shortlist_count(spark, ivf):
 
     meta = _meta(col._index_path("ivfpq"))
     bypassed = ann.ivfpq_knn_batch(
-        col._masked_layout_df("ivfpq"),  # no meta: read uncached
+        col._read_masked_layout("ivfpq"),
         np.asarray(meta["centroids"], dtype=float),
         np.asarray(meta["codebooks"], dtype=float),
         col.df().select("id", "embedding", "payload"),
@@ -226,22 +226,6 @@ def test_refresh_and_consolidate_serve_new_ids(spark, ivf):
     serves_new_ids("consolidated")
 
 
-def test_legacy_meta_without_token_reads_uncached(spark, tmp_path):
-    cat = Catalog(spark, str(tmp_path / "legacy"))
-    col = cat.create_collection("lg", dim=DIM)
-    col.upsert(_points(spark, range(100)))
-    col.build_ivf_index(n_centroids=4)
-    meta = _meta(col._index_path("ivf"))
-    meta.pop("generation")
-    with open(os.path.join(col._index_path("ivf"), "_index_meta.json"), "w") as fh:
-        json.dump(meta, fh)
-    for _ in range(2):
-        got = [r["id"] for r in col.search_ivf(_vec(5), limit=1, nprobe=4).collect()]
-        assert got == [5]
-    assert cat._layouts == {}
-    assert col.index_status()["ivf"]["layout_cached"] is False
-
-
 def test_repeated_build_search_cycles_hold_one_entry(spark, tmp_path):
     """Ten build/search cycles on one Catalog keep exactly one cached
     layout for the index, and it is the current generation's; dropping
@@ -289,7 +273,7 @@ def test_lsh_layout_reused_across_searches(spark, tmp_path):
         )
         assert warm_jobs < cold_jobs, (rebuilt_by, cold_jobs, warm_jobs)
         bypassed = ann.lsh_knn_pruned_df(
-            col._masked_layout_df("lsh"),
+            col._read_masked_layout("lsh"),
             q,
             k=5,
             bits=6,

@@ -1,18 +1,33 @@
 #!/usr/bin/env python
-"""Regenerate plans/PLANS.md — formatted physical plans for the headline
-operators with a note on what each plan must exhibit to scale (SURVEY §4).
+"""Formatted physical plans (``df.explain("formatted")``) of registry
+queries.
 
-Run after any plan-affecting change:  python tools/dump_plans.py
+    python tools/dump_plans.py
+        Regenerate plans/PLANS.md: the headline operators, each with a
+        note on what its plan must exhibit to scale (SURVEY §4). Run after
+        any plan-affecting change.
+
+    python tools/dump_plans.py --tag TAG [--phase before|after] [query ...]
+        Write plans/TAG/<query>_<phase>.txt for each named query (default:
+        the PLANS.md operators), e.g. the before/after evidence of an
+        optimization: run ``--phase before`` in a checkout of the parent
+        commit and ``--phase after`` in the changed tree.
+
+PLANS.md is built on the sf0.001 fixture; a --tag dump on
+$SPARK_GRAFT_SF_DIR when set.
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import os
 import sys
+import warnings
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 NOTES = {
     "q_knn_topk": (
@@ -155,12 +170,49 @@ NOTES = {
 }
 
 
+def explain(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def dump_tagged(spark, queries, sf: str, tag: str, phase: str, names) -> None:
+    out_dir = os.path.join(REPO, "plans", tag)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore")
+            plan = explain(queries[name](spark, sf))
+        path = os.path.join(out_dir, f"{name}_{phase}.txt")
+        with open(path, "w") as fh:
+            fh.write(
+                f"# {name} — .explain('formatted') at {sf} ({phase})\n"
+                "# Eager driver-side jobs (volume probes, broadcast sizing\n"
+                "# counts) run at query-build time and are not in this plan.\n\n"
+            )
+            fh.write(plan)
+        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description="Dump formatted physical plans of registry queries.")
+    ap.add_argument("--tag", help="write plans/TAG/<query>_<phase>.txt instead of PLANS.md")
+    ap.add_argument("--phase", default="after", help="file-name suffix with --tag")
+    ap.add_argument("queries", nargs="*", help="query names (with --tag)")
+    args = ap.parse_args()
+    if args.queries and not args.tag:
+        ap.error("query names need --tag")
+
     from vector_database_spark.queries import QUERIES
     from vector_database_spark.session import get_spark
 
     spark = get_spark("plans", cpus=8)
     sf = "/root/testdata/sf0.001"
+    if args.tag:
+        sf = os.environ.get("SPARK_GRAFT_SF_DIR", sf)
+        dump_tagged(spark, QUERIES, sf, args.tag, args.phase, args.queries or list(NOTES))
+        return
     out = [
         '# Physical plans — key operators (`df.explain("formatted")` @ sf0.001)',
         "",
@@ -170,12 +222,9 @@ def main() -> None:
         "",
     ]
     for name, note in NOTES.items():
-        df = QUERIES[name](spark, sf)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        out.append(f"## {name}\n\n{note}\n\n```\n{buf.getvalue().strip()}\n```\n")
-    dest = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "PLANS.md")
+        plan = explain(QUERIES[name](spark, sf))
+        out.append(f"## {name}\n\n{note}\n\n```\n{plan.strip()}\n```\n")
+    dest = os.path.join(REPO, "plans", "PLANS.md")
     os.makedirs(os.path.dirname(dest), exist_ok=True)
     with open(dest, "w") as f:
         f.write("\n".join(out))

@@ -118,7 +118,7 @@ def main() -> None:
             from vector_database_spark.operators import ann
 
             res = ann.nsw_search_layout(
-                col._masked_layout_df("nsw"), queries, k=K,
+                col._read_masked_layout("nsw"), queries, k=K,
                 id_col="id", emb_col="embedding",
             ).collect()
             for r in res:

@@ -7,9 +7,13 @@ Reference semantics being reproduced (SURVEY §2.A):
   - upsert(points): insert-or-replace by id, latest wins — vector_db.py:94-106
   - search(query_vector, limit=k) — vector_db_query.py:78-82
 
-A *collection* is a Parquet directory with schema
-``id BIGINT, embedding ARRAY<FLOAT>, payload <struct/map>`` plus an entry in
-a JSON catalog file ``{name: {dim, metric, version}}``. At 100 TB the same
+A *collection* is one home directory ``<root>/<name>/`` holding a Parquet
+directory ``points`` with schema ``id BIGINT, embedding ARRAY<FLOAT>,
+payload <struct/map>`` and everything derived from it (tombstone log, ANN
+indexes, their masks and staging dirs), plus an entry in a JSON catalog
+file ``<root>/_catalog.json`` of the form ``{name: {dim, metric, version}}``.
+Keys starting with ``_`` in that file are the catalog's own, never
+collections. At 100 TB the same
 layout holds: the Parquet dir becomes a partitioned/bucketed table (bucket
 by ``pmod(id, N)`` so upsert-merge and point lookups co-locate), and the
 JSON catalog becomes the metastore entry. Writes here go through an atomic
@@ -21,7 +25,6 @@ from __future__ import annotations
 
 import contextlib
 import hashlib
-import inspect
 import json
 import os
 import tempfile
@@ -57,9 +60,16 @@ VALID_METRICS = ("cosine", "dot", "euclid", "manhattan")
 # (id, version) table is a small multiple). See _resolved_df.
 TOMBSTONE_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 
-# reserved key in the catalog JSON holding {alias: collection}; never a
-# valid collection name (create_collection would collide with it otherwise)
+# reserved keys in the catalog JSON; collection names cannot start with
+# "_" (Catalog._check_name), so no collection collides with them.
+# ALIASES_KEY holds {alias: collection}. LAYOUT_KEY records the on-disk
+# layout the root was written with: LAYOUT nests each collection's
+# directories in <root>/<name>/. Roots written before the key existed
+# spread a collection over sibling directories at the root, which this
+# code neither reads nor deletes (Catalog refuses to open them).
 ALIASES_KEY = "__aliases__"
+LAYOUT_KEY = "_layout"
+LAYOUT = "home-dir"
 
 # Auto-compaction policy (r8 directive 6): the log-structured layout's
 # read cost grows with the RAW log (latest-wins windows every version
@@ -132,9 +142,9 @@ def _ivf_drift_ratio(meta: dict) -> float | None:
     """Centroid-drift ratio from a persisted IVF index meta: the
     rows-weighted mean assignment distance across every refresh segment
     since the last full build, over the build-time mean. None when
-    unmeasurable (legacy meta, no refreshes yet, or a degenerate
-    zero-distance build)."""
-    base = meta.get("build_mean_assign_dist")
+    unmeasurable (no refreshes yet, or a degenerate zero-distance
+    build)."""
+    base = meta["build_mean_assign_dist"]
     # entries without the mean (empty-delta refreshes record rows only)
     # carry no signal — skip them rather than KeyError (r10: the
     # protocol now records {seg, rows} for every family/refresh)
@@ -143,7 +153,7 @@ def _ivf_drift_ratio(meta: dict) -> float | None:
         for s in (meta.get("refresh_stats") or [])
         if s.get("mean_assign_dist") is not None
     ]
-    if not base or base <= 0 or not stats:
+    if base <= 0 or not stats:
         return None
     rows = sum(s["rows"] for s in stats)
     if rows <= 0:
@@ -155,14 +165,22 @@ def _ivf_drift_ratio(meta: dict) -> float | None:
 def _ivf_drift_volume_ok(meta: dict) -> bool:
     """True iff enough rows have been refreshed since the last build for
     the drift ratio to be trustworthy evidence of a SHIFTED DISTRIBUTION
-    rather than a few outliers (see IVF_DRIFT_MIN_ROWS/_FRACTION).
-    Legacy metas without build_rows use the absolute floor only."""
+    rather than a few outliers (see IVF_DRIFT_MIN_ROWS/_FRACTION)."""
     rows = sum(s["rows"] for s in (meta.get("refresh_stats") or []))
-    floor = IVF_DRIFT_MIN_ROWS
-    build_rows = meta.get("build_rows")
-    if build_rows:
-        floor = max(floor, int(IVF_DRIFT_MIN_FRACTION * build_rows))
+    floor = max(
+        IVF_DRIFT_MIN_ROWS, int(IVF_DRIFT_MIN_FRACTION * meta["build_rows"])
+    )
     return rows >= floor
+
+
+def _nsw_churn(meta: dict) -> int:
+    """Nodes an NSW index's refreshes changed since its base build, the
+    delta-fraction escalation's numerator: per segment max(rows,
+    superseded), so delete-only churn (mask holes with no delta rows)
+    counts too (r10 review)."""
+    return sum(
+        max(s["rows"], s["superseded"]) for s in meta.get("refresh_stats", [])
+    )
 
 
 def _dist_to_assigned_centroid(centroids):
@@ -296,6 +314,15 @@ class Catalog:
         os.makedirs(root, exist_ok=True)
         self._catalog_path = os.path.join(root, "_catalog.json")
         self._lock_path = os.path.join(root, "_catalog.lock")
+        cat = self._load()
+        if cat.get(LAYOUT_KEY) != LAYOUT and self._collections(cat):
+            raise ValueError(
+                f"catalog root {root!r} holds collections in an on-disk "
+                f"layout this version does not read (its _catalog.json has "
+                f"no {LAYOUT_KEY!r}: {LAYOUT!r}); export them with the "
+                f"previous version's export_points and import_points them "
+                f"into a new root"
+            )
         # resolved ANN layout relations, at most one per index path:
         # {index_path: (generation, DataFrame, raw row count or None)}.
         # Reusing the relation reuses its file listing, so a search skips
@@ -336,6 +363,7 @@ class Catalog:
             return json.load(f)
 
     def _save(self, cat: dict) -> None:
+        cat[LAYOUT_KEY] = LAYOUT
         tmp = self._catalog_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(cat, f, indent=2, sort_keys=True)
@@ -383,39 +411,37 @@ class Catalog:
 
     def _evict_layouts(self, name: str) -> None:
         """Release the cached layouts of every index of a collection."""
-        for path in self._collection_dirs(name):
-            self._layouts.pop(path, None)
+        home = self._home(name) + os.sep
+        for path in [p for p in self._layouts if p.startswith(home)]:
+            del self._layouts[path]
 
-    def _collection_dirs(self, name: str) -> list[str]:
-        return VectorCollection._owned_dirs(os.path.join(self.root, name))
+    # -- on-disk layout ----------------------------------------------------
+    def _home(self, name: str) -> str:
+        """The one directory holding everything collection ``name``
+        stores (VectorCollection.path and every directory derived from
+        it)."""
+        return os.path.join(self.root, name)
 
     @staticmethod
     def _check_name(name: str) -> None:
-        """A collection's name is one entry in the catalog root. An empty
-        name, ``.``, ``..`` or one holding a path separator would put its
-        directories at the root itself, its parent or elsewhere, where a
-        drop would delete them."""
-        if name in ("", ".", "..") or any(
+        """A collection's name is one entry of the catalog root that is
+        not the catalog's own. An empty name, one holding a path
+        separator or one starting with ``.`` (``.``, ``..``) would put
+        its home at the root itself, its parent or elsewhere, where a
+        drop would delete it; one starting with ``_`` would collide with
+        the catalog's files and JSON keys."""
+        if not name or name[0] in "._" or any(
             sep and sep in name for sep in (os.sep, os.altsep)
         ):
             raise ValueError(f"invalid collection name {name!r}")
 
-    def _remove_collection_dirs(self, name: str, cat: dict) -> None:
+    def _remove_home(self, name: str) -> None:
         """Delete what ``name`` left on disk, so a collection created
         under the name later starts empty. Called under the catalog lock
-        with a catalog that has no entry for ``name``; a directory that
-        another collection in it owns (a collection literally named
-        ``x__ivf`` when ``x`` goes) is kept."""
+        with a catalog that has no entry for ``name``."""
         import shutil
 
-        owned = {
-            d
-            for other in self._collections(cat)
-            for d in self._collection_dirs(other)
-        }
-        for d in self._collection_dirs(name):
-            if d not in owned:
-                shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(self._home(name), ignore_errors=True)
         self._evict_layouts(name)
 
     # -- DDL (SURVEY A1/A2) ------------------------------------------------
@@ -451,8 +477,8 @@ class Catalog:
                 raise ValueError(f"{name!r} is an alias; pick another name")
             if name not in cat:
                 # a drop that crashed between its catalog commit and its
-                # deletes leaves data a new collection must not read
-                self._remove_collection_dirs(name, cat)
+                # delete leaves data a new collection must not read
+                self._remove_home(name)
                 cat[name] = {"dim": dim, "metric": metric, "version": 0}
                 if tenant_key is not None:
                     cat[name]["tenant_key"] = tenant_key
@@ -495,11 +521,11 @@ class Catalog:
 
     def drop_collection(self, name: str) -> None:
         """Remove a collection, its aliases and everything it stored:
-        points, tombstones and every index (Qdrant's delete_collection
-        deletes the points too). The catalog commit comes first, so a
-        crash before the deletes leaves orphaned directories, which
-        create_collection clears. Dropping an unknown name deletes
-        nothing."""
+        points, tombstones and every index, all under its one home
+        directory (Qdrant's delete_collection deletes the points too). The
+        catalog commit comes first, so a crash before the delete leaves an
+        orphaned home, which create_collection clears. Dropping an unknown
+        name deletes nothing."""
         self._check_name(name)
         with self._lock():
             cat = self._load()
@@ -509,14 +535,14 @@ class Catalog:
                 del aliases[a]  # no dangling aliases (Qdrant drops them too)
             self._save(cat)
             if dropped is not None:
-                self._remove_collection_dirs(name, cat)
+                self._remove_home(name)
 
     def list_collections(self) -> list[str]:
         return sorted(self._collections(self._load()))
 
     @staticmethod
     def _collections(cat: dict) -> dict:
-        return {k: v for k, v in cat.items() if k != ALIASES_KEY}
+        return {k: v for k, v in cat.items() if not k.startswith("_")}
 
     # -- aliases (Qdrant update_collection_aliases / get_aliases) ----------
     def update_aliases(
@@ -562,10 +588,20 @@ class Catalog:
 class VectorCollection:
     """One collection: Parquet-backed DataFrame of points + search surface.
 
+    On disk everything lives in the collection's home ``<root>/<name>/``
+    (Qdrant keeps a collection's points, payloads and HNSW index under
+    its own storage directory the same way): ``path`` is the points
+    directory ``<home>/points``, and every other directory is ``path``
+    plus a suffix — ``__tombstones``, the fold and shrink asides, and
+    per index kind ``__<kind>``, ``__<kind>_mask``,
+    ``__<kind>__consolidate_stage`` and the refresh's ``__stage_seg<n>``
+    dirs. A drop is one ``rmtree`` of the home.
+
     Physical layout (SURVEY §4.3 scale items):
       * ``bucket = pmod(id, N_BUCKETS)`` partition column — point lookups
-        and id-equijoins prune to one directory; the latest-wins window
-        shuffles within buckets only.
+        (``get``) and id-equijoins prune to one directory. The latest-wins
+        window does not use it: its executed plan hash-partitions whole
+        rows by ``id`` (one ``Exchange``).
       * ``norm`` (L2) materialized at ingest — cosine at query time is one
         dot product + one divide; the per-row self-dot+sqrt is paid once,
         not per query (Qdrant normalizes internally the same way).
@@ -576,7 +612,7 @@ class VectorCollection:
     def __init__(self, catalog: Catalog, info: CollectionInfo):
         self.catalog = catalog
         self.info = info
-        self.path = os.path.join(catalog.root, info.name)
+        self.path = os.path.join(catalog._home(info.name), "points")
 
     # -- scan ---------------------------------------------------------------
     @property
@@ -602,9 +638,9 @@ class VectorCollection:
             return empty
         return spark.read.parquet(self.path)
 
-    # -- on-disk names: each directory a collection owns is spelled here
-    # (the index ones in _index_dirs) and nowhere else, so a drop cannot
-    # miss one that a new collection of the same name would read back
+    # -- on-disk names: every directory besides ``path`` is ``path`` plus
+    # a suffix spelled here (the index ones in _index_dirs), so all of
+    # them sit inside the collection's home
     @staticmethod
     def _tombstones_of(path: str) -> str:
         return path + "__tombstones"
@@ -618,21 +654,6 @@ class VectorCollection:
     def _shrink_asides(tombstone_path: str) -> tuple[str, str]:
         """(new, old), the same pair for a tombstone-log shrink."""
         return tombstone_path + "__shrink", tombstone_path + "__preshrink"
-
-    @classmethod
-    def _owned_dirs(cls, path: str) -> list[str]:
-        """Every directory the collection at ``path`` may own: its data,
-        its tombstone log, the asides a crashed fold or tombstone shrink
-        leaves (each recovered into place on the next read), and each
-        index family's layout, mask and consolidation stage."""
-        tombs = cls._tombstones_of(path)
-        return [
-            path,
-            *cls._fold_asides(path),
-            tombs,
-            *cls._shrink_asides(tombs),
-            *(d for kind in cls._INDEX_KINDS for d in cls._index_dirs(path, kind)),
-        ]
 
     @property
     def _tombstone_path(self) -> str:
@@ -1715,11 +1736,11 @@ class VectorCollection:
         schedule): (1) bring every EXISTING stale ANN index back to
         freshness — since r10 EVERY family refreshes incrementally
         (LSH/IVF r7-r8, NSW/IVFPQ r10), falling back to a full rebuild
-        when a fold broke delta reconstruction, the layout predates
-        segments, or a quality escalation fires (drift / delta fraction
-        / width outgrowth below), each rebuild reusing the persisted
-        caller build params (None stays None, so auto points re-derive at
-        the grown size); then (2) evaluate the write-log compaction policy
+        when a fold broke delta reconstruction or a quality escalation
+        fires (drift / delta fraction / width outgrowth below), each
+        rebuild reusing the persisted caller build params (None stays
+        None, so auto points re-derive at the grown size); then (2)
+        evaluate the write-log compaction policy
         (maybe_auto_compact — snapshots and the opt-out are respected).
         Index work runs BEFORE the fold on purpose: refresh needs the
         intact log, and compact() mints no version, so refreshed indexes
@@ -1820,7 +1841,7 @@ class VectorCollection:
                             report[kind] = "refreshed"
                         continue
                 except ValueError:
-                    pass  # folded history / legacy layout → rebuild
+                    pass  # folded history → rebuild
             if kind == "nsw" and drifted and not outgrown:
                 # NSW's quality escalation CONSOLIDATES instead of
                 # rebuilding (r11, verdict directive 5): the Lucene
@@ -1836,25 +1857,9 @@ class VectorCollection:
                     continue
                 except ValueError:
                     pass
-            meta = self._index_meta(kind)
-            params = {}
-            if meta is not None:
-                if "build_params" in meta:
-                    params = meta["build_params"]
-                else:
-                    # legacy metas (pre-r8) persisted the caller knobs at
-                    # the TOP level (bits/tables for LSH, n_centroids for
-                    # IVF): rebuild at those, not at the builder defaults —
-                    # a tables=8 index must not silently come back as
-                    # tables=4 with different recall (r8 ADVICE). Intersect
-                    # with the builder signature so meta bookkeeping keys
-                    # (built_at_version, centroids, ...) never leak in.
-                    sig = inspect.signature(
-                        getattr(self, f"build_{kind}_index")
-                    )
-                    params = {
-                        k: meta[k] for k in sig.parameters if k in meta
-                    }
+            # the caller's build args, so a tables=8 index never comes
+            # back as tables=4 (None stays None: auto sizes re-derive)
+            params = self._index_meta(kind)["build_params"]
             getattr(self, f"build_{kind}_index")(**params)
             report[kind] = (
                 "rebuilt_drift"
@@ -1878,16 +1883,14 @@ class VectorCollection:
         upper bound this sizes from: auto-compaction bounds raw at ~2×
         live, i.e. ≤ +1 bit of inflation, so pure update churn can
         never trigger a spurious full rebuild (r9 review). Explicitly
-        pinned widths (and legacy metas, whose intent is unknowable)
-        never escalate — the caller's choice stands."""
-        meta = self._index_meta("lsh") or {}
-        bp = meta.get("build_params")
-        if bp is None or bp.get("bits") is not None:
+        pinned widths never escalate — the caller's choice stands."""
+        meta = self._index_meta("lsh")
+        if meta["build_params"]["bits"] is not None:
             return False
         from vector_database_spark.operators import ann
 
         rows = raw_rows if raw_rows is not None else self._approx_live_rows()
-        return ann._auto_lsh_bits(rows) >= (int(meta.get("bits", 0)) + 2)
+        return ann._auto_lsh_bits(rows) >= int(meta["bits"]) + 2
 
     def _ivf_cells_outgrown(self, raw_rows: int | None = None) -> bool:
         """True iff the persisted IVF index was built AUTO-sized
@@ -1895,7 +1898,7 @@ class VectorCollection:
         its cell count — _auto_n_centroids(live rows) now derives at
         least 2× the built k. The 2× hysteresis (k ∝ √N, so it means N
         grew ≥4×) keeps steady growth from thrashing rebuilds; pinned
-        cell counts and legacy metas never escalate. This is the growth
+        cell counts never escalate. This is the growth
         mode the drift ratio cannot see: same-distribution writes keep
         refreshed rows as close to the pinned centroids as the build
         was, while every cell's row count — and with it the scan cost of
@@ -1905,17 +1908,13 @@ class VectorCollection:
         hysteresis, so churn cannot thrash rebuilds; an opted-out,
         never-folded collection may escalate early, which only re-trains
         sooner than strictly needed."""
-        meta = self._index_meta("ivf") or {}
-        bp = meta.get("build_params")
-        if bp is None or bp.get("n_centroids") is not None:
-            return False
-        built_k = len(meta.get("centroids", []))
-        if built_k <= 0:
+        meta = self._index_meta("ivf")
+        if meta["build_params"]["n_centroids"] is not None:
             return False
         from vector_database_spark.operators import ann
 
         rows = raw_rows if raw_rows is not None else self._approx_live_rows()
-        return ann._auto_n_centroids(rows) >= 2 * built_k
+        return ann._auto_n_centroids(rows) >= 2 * len(meta["centroids"])
 
     def _index_drift_exceeded(self, kind: str) -> bool:
         """optimize()'s per-family quality escalation, read from the
@@ -1939,9 +1938,8 @@ class VectorCollection:
         gradually, and neither has a per-row drift statistic (graph
         quality is global). Per segment the signal is max(rows,
         superseded): superseded covers delete-only churn (mask holes with
-        zero delta rows — rows alone would never fire, r10 review), rows
-        covers insert-heavy growth on early-r10 metas that predate the
-        superseded field. Past NSW_DELTA_REBUILD_FRACTION of build_rows,
+        zero delta rows — rows alone would never fire, r10 review). Past
+        NSW_DELTA_REBUILD_FRACTION of build_rows,
         optimize() re-trains one consolidated graph instead of
         refreshing again.
 
@@ -1951,14 +1949,9 @@ class VectorCollection:
         if meta is None or kind == "lsh":
             return False
         if kind == "nsw":
-            build_rows = meta.get("build_rows")
-            if not build_rows:
-                return False  # legacy meta: no baseline to compare against
-            churn = sum(
-                max(s["rows"], s.get("superseded", 0))
-                for s in (meta.get("refresh_stats") or [])
+            return _nsw_churn(meta) >= (
+                NSW_DELTA_REBUILD_FRACTION * meta["build_rows"]
             )
-            return churn >= NSW_DELTA_REBUILD_FRACTION * build_rows
         ratio = _ivf_drift_ratio(meta)
         return (
             ratio is not None
@@ -2429,7 +2422,7 @@ class VectorCollection:
         a pinned base n_buckets when the caller exceeded it. Derived
         from the persisted build_params so a crash-retried refresh of
         the same segment always lands in the same bucket range."""
-        pinned = (meta.get("build_params") or {}).get("n_buckets") or 0
+        pinned = meta["build_params"]["n_buckets"] or 0
         return max(self._NSW_SEG_BUCKET_STRIDE, int(pinned))
 
     def refresh_nsw_index(self) -> int:
@@ -2452,7 +2445,7 @@ class VectorCollection:
         from vector_database_spark.operators import ann
 
         def build_delta(live: DataFrame, meta: dict, seg: int) -> DataFrame:
-            bp = meta.get("build_params") or {}
+            bp = meta["build_params"]
             return ann.nsw_graph_rows(
                 live.select("id", "embedding"),
                 # the delta's bucket count always auto-derives from the
@@ -2461,8 +2454,8 @@ class VectorCollection:
                 # for a small delta would shatter the delta into
                 # near-empty graphs with no beam to speak of
                 n_buckets=None,
-                M=bp.get("M", 8),
-                ef_construction=bp.get("ef_construction", 64),
+                M=bp["M"],
+                ef_construction=bp["ef_construction"],
                 id_col="id",
                 emb_col="embedding",
                 bucket_offset=seg * self._nsw_seg_stride(meta),
@@ -2499,11 +2492,11 @@ class VectorCollection:
         from vector_database_spark.operators import ann
 
         meta = self._fresh_meta("nsw", "consolidate_nsw_index")
-        bp = meta.get("build_params") or {}
+        bp = meta["build_params"]
         merged = ann.nsw_merge_graph_rows(
-            self._masked_layout_df("nsw"),
-            M=bp.get("M", 8),
-            ef_construction=bp.get("ef_construction", 64),
+            self._masked_layout_df("nsw", meta),
+            M=bp["M"],
+            ef_construction=bp["ef_construction"],
             id_col="id",
             emb_col="embedding",
         ).withColumn("__seg", F.lit(0))
@@ -2521,9 +2514,7 @@ class VectorCollection:
         self.catalog._write_index_meta(
             index_path,
             {
-                "built_at_version": meta.get(
-                    "built_at_version", current_version
-                ),
+                "built_at_version": meta["built_at_version"],
                 "covers_version": current_version,
                 "next_seg": 1,
                 # the CALLER's build intent is preserved — a later
@@ -2672,22 +2663,9 @@ class VectorCollection:
                 f"collection {self.info.name!r} has no {KIND} index; "
                 f"call build_{kind}_index() first"
             )
-        if "next_seg" not in meta:
-            # pre-segment legacy layout: its base files have no __seg
-            # column, so appending seg-stamped delta files would leave a
-            # MIXED schema that spark.read.parquet (no mergeSchema)
-            # resolves from an arbitrary file — if it picks a base file,
-            # __seg is dropped, the layout reader stamps every row
-            # __seg=0 and the mask filter silently drops the NEW rows
-            # (r8 ADVICE). One full build stamps __seg=0 and unlocks it.
-            raise ValueError(
-                f"{KIND} index of {self.info.name!r} predates the segment "
-                f"scheme (meta has no next_seg); run build_{kind}_index() "
-                f"once before refresh_{kind}_index()"
-            )
         cat_info = self.catalog._load()[self.info.name]
         current_version = cat_info["version"]
-        covers = meta.get("covers_version", meta["built_at_version"])
+        covers = meta["covers_version"]
         if covers == current_version:
             return 0
         if covers < cat_info.get("compacted_at", 0):
@@ -2796,7 +2774,7 @@ class VectorCollection:
             self.catalog._write_index_meta(
                 index_path,
                 meta,
-                retry_key=f"{meta.get('generation')}/seg{seg}",
+                retry_key=f"{meta['generation']}/seg{seg}",
             )
             return n_delta
         finally:
@@ -2933,7 +2911,7 @@ class VectorCollection:
                 f"call build_{kind}_index() first"
             )
         current_version = self.catalog._load()[self.info.name]["version"]
-        covers = meta.get("covers_version", meta["built_at_version"])
+        covers = meta["covers_version"]
         if covers != current_version:
             raise ValueError(
                 f"{label} index of {self.info.name!r} covers version "
@@ -2942,27 +2920,14 @@ class VectorCollection:
             )
         return meta
 
-    def _masked_layout_df(self, kind: str, meta: dict | None = None) -> DataFrame:
-        """A segment-stamped index layout with refresh segments RESOLVED:
-        superseded rows (older __seg of a rewritten id, any row of a
-        deleted id) drop via the side mask — size-gated broadcast, same
-        byte budget as the tombstone join. Shared by every index family
-        (one copy of the semantics — r8 review). Layouts from
-        before the segment scheme (no __seg column) read as segment 0;
-        NULL __seg coalesces to 0 as defense in depth against mixed
-        schemas (refresh refuses the legacy layout, so it shouldn't
-        trigger).
-
-        Given the index ``meta`` a search just read, the relation is
-        reused for as long as the meta's ``generation`` token stands
-        (Catalog._write_index_meta re-mints it on every write): its file
-        listing, schema and mask broadcast decision are resolved once
-        per index generation instead of once per query, and partition
-        filters still prune against the cached listing. A meta without
-        a token (written before tokens existed) reads uncached."""
-        generation = (meta or {}).get("generation")
-        if generation is None:
-            return self._read_masked_layout(kind)
+    def _masked_layout_df(self, kind: str, meta: dict) -> DataFrame:
+        """:meth:`_read_masked_layout`, reused for as long as the
+        ``generation`` token of the index ``meta`` the caller just read
+        stands (Catalog._write_index_meta re-mints it on every write):
+        the file listing, schema and mask broadcast decision are
+        resolved once per index generation instead of once per query,
+        and partition filters still prune against the cached listing."""
+        generation = meta["generation"]
         index_path = self._index_path(kind)
         cached = self.catalog._layouts.get(index_path)
         if cached is not None and cached[0] == generation:
@@ -2972,14 +2937,14 @@ class VectorCollection:
         return layout
 
     def _read_masked_layout(self, kind: str) -> DataFrame:
+        """``kind``'s segment-stamped index layout with refresh segments
+        RESOLVED, read afresh: superseded rows (older __seg of a
+        rewritten id, any row of a deleted id) drop via the side mask —
+        size-gated broadcast, same byte budget as the tombstone join.
+        Shared by every index family (one copy of the semantics — r8
+        review)."""
         mask_path = self._mask_path(kind)
         rows = self.catalog.spark.read.parquet(self._index_path(kind))
-        if "__seg" not in rows.columns:
-            rows = rows.withColumn("__seg", F.lit(0))
-        else:
-            rows = rows.withColumn(
-                "__seg", F.coalesce(F.col("__seg"), F.lit(0))
-            )
         if not os.path.exists(mask_path):
             return rows
         mask = (
@@ -3019,8 +2984,7 @@ class VectorCollection:
         # `tables` copies per id — normalize to per-id units or the
         # multi-table families would need tables x the churn to trigger
         if kind == "lsh":
-            meta = self._index_meta(kind) or {}
-            layout_rows //= max(int(meta.get("tables", 1)), 1)
+            layout_rows //= int(self._index_meta(kind)["tables"])
         return mask_rows >= LAYOUT_MASK_CONSOLIDATE_FRACTION * max(
             layout_rows, 1
         )
@@ -3050,7 +3014,7 @@ class VectorCollection:
         meta = self._fresh_meta(kind, f"consolidate_{kind}_index")
         index_path = self._index_path(kind)
         partition_by = self._INDEX_KINDS[kind][1]
-        live = self._masked_layout_df(kind)
+        live = self._masked_layout_df(kind, meta)
         staging = self._stage_path(kind)
         import shutil as _shutil
 
@@ -3294,7 +3258,7 @@ class VectorCollection:
         probe = [int(i) for i in np.argsort(-sims)[:nprobe]]
         codes = self._masked_layout_df("ivfpq", meta)
         if shortlist is None:
-            shortlist = self._ivfpq_auto_shortlist(codes, meta, nprobe)
+            shortlist = self._ivfpq_auto_shortlist(meta, nprobe)
         cell_codes = codes.filter(F.col("centroid_id").isin(probe))
         cand = ann.pq_knn(
             cell_codes,
@@ -3317,29 +3281,22 @@ class VectorCollection:
             payload_cols=("payload",),
         )
 
-    def _ivfpq_auto_shortlist(
-        self, layout: DataFrame, meta: dict, nprobe: int
-    ) -> int:
+    def _ivfpq_auto_shortlist(self, meta: dict, nprobe: int) -> int:
         """The auto re-rank shortlist for ``nprobe`` cells, sized from a
         scanned-code estimate: the layout's parquet footer row count,
         deliberately RAW (unmasked) — footer metadata only, no mask join
         per search; superseded rows inflate it, which only widens the
         shortlist (the scale-safe direction). The count is kept next to
-        the cached layout for its generation, so only the first search
-        of a generation lists the layout's files for it; a ``layout``
-        that is not the cached one (a meta without a token) counts on
-        every call."""
+        the layout the caller's ``_masked_layout_df`` just cached for
+        ``meta``'s generation, so only the first search of a generation
+        lists the layout's files for it."""
         from vector_database_spark.operators import ann
 
         path = self._index_path("ivfpq")
-        cached = self.catalog._layouts.get(path)
-        mine = cached is not None and cached[1] is layout
-        if mine and cached[2] is not None:
-            raw_codes = cached[2]
-        else:
+        generation, layout, raw_codes = self.catalog._layouts[path]
+        if raw_codes is None:
             raw_codes = self.catalog.spark.read.parquet(path).count()
-            if mine:
-                self.catalog._layouts[path] = (cached[0], layout, raw_codes)
+            self.catalog._layouts[path] = (generation, layout, raw_codes)
         return ann._auto_shortlist(
             None, int(raw_codes * nprobe / max(len(meta["centroids"]), 1))
         )
@@ -3371,7 +3328,7 @@ class VectorCollection:
             # shortlist would count() the MASKED multi-segment layout —
             # a mask join per batch call
             nprobe = ann._auto_nprobe(nprobe, len(centroids))
-            shortlist = self._ivfpq_auto_shortlist(codes, meta, nprobe)
+            shortlist = self._ivfpq_auto_shortlist(meta, nprobe)
         return ann.ivfpq_knn_batch(
             codes,
             centroids,
@@ -3530,24 +3487,22 @@ class VectorCollection:
                     "layout_cached": False,
                 }
                 continue
-            built = meta["built_at_version"]
-            covers = meta.get("covers_version", built)
             cached = self.catalog._layouts.get(self._index_path(kind))
             entry = {
                 "exists": True,
-                "built_at_version": built,
-                "fresh": covers == current,
+                "built_at_version": meta["built_at_version"],
+                "fresh": meta["covers_version"] == current,
                 # a search would reuse the resolved layout relation
                 # instead of re-listing the index's files
                 "layout_cached": cached is not None
-                and cached[0] == meta.get("generation"),
+                and cached[0] == meta["generation"],
             }
             if kind in ("ivf", "ivfpq"):
                 # drift ratio of everything refreshed since the last full
                 # build vs the build distribution — centroid-assign
                 # distance for IVF (r9), ADC reconstruction error for
-                # IVFPQ (r10); None = unmeasurable (no refreshes yet /
-                # legacy meta). optimize() escalates refresh->rebuild
+                # IVFPQ (r10); None = unmeasurable (no refreshes yet).
+                # optimize() escalates refresh->rebuild
                 # past IVF_DRIFT_REBUILD_RATIO — but only on a
                 # non-trivial refreshed volume (drift_rows vs the
                 # _ivf_drift_volume_ok floor, r9 review); the ratio
@@ -3558,19 +3513,11 @@ class VectorCollection:
                 )
             if kind == "nsw":
                 # churn fraction vs the base graph (r10): optimize()
-                # consolidates past NSW_DELTA_REBUILD_FRACTION. Per
-                # segment the churn is max(rows, superseded) so
-                # delete-only masking counts too (r10 review)
-                stats_list = meta.get("refresh_stats") or []
-                entry["delta_rows"] = sum(s["rows"] for s in stats_list)
-                churn = sum(
-                    max(s["rows"], s.get("superseded", 0))
-                    for s in stats_list
+                # consolidates past NSW_DELTA_REBUILD_FRACTION
+                entry["delta_rows"] = sum(
+                    s["rows"] for s in meta.get("refresh_stats", [])
                 )
-                build_rows = meta.get("build_rows")
-                entry["delta_fraction"] = (
-                    churn / build_rows if build_rows else None
-                )
+                entry["delta_fraction"] = _nsw_churn(meta) / meta["build_rows"]
             out[kind] = entry
         return out
 
@@ -3936,15 +3883,6 @@ class VectorCollection:
                 )
         raise ValueError(f"unsupported query form: {query!r}")
 
-    def _resolve_vector_query(self, query) -> list[float]:
-        if isinstance(query, int):
-            return self._point_vectors([query])[int(query)]
-        if isinstance(query, (list, tuple)):
-            return [float(x) for x in query]
-        raise ValueError(
-            f"prefetch rerank needs a vector or point-id query, got {query!r}"
-        )
-
     def _fuse_legs(self, legs: list[DataFrame], method: str, limit: int) -> DataFrame:
         """RRF / DBSF fusion over prefetch leg results (Qdrant Fusion enum).
         Legs are ≤ tens of rows each (bounded by their limits), so the
@@ -3993,8 +3931,11 @@ def latest_wins(df: DataFrame, id_col: str = "id", version_col: str = "version")
     """Resolve multi-version rows to the latest version per id (SURVEY A3).
 
     ``row_number() OVER (PARTITION BY id ORDER BY version DESC) = 1`` — the
-    oracle twin is DuckDB QUALIFY. One shuffle on the id key; at scale the
-    id-bucketed table layout makes this shuffle-free.
+    oracle twin is DuckDB QUALIFY. The executed plan hash-partitions whole
+    rows on the id key (``Exchange hashpartitioning(id)``) before the
+    window: the ``bucket`` partition column of a collection does not spare
+    that shuffle, since Spark does not know the files are id-bucketed; it
+    buys point-lookup pruning (``VectorCollection.get``) only.
     """
     w = Window.partitionBy(id_col).orderBy(F.col(version_col).desc())
     return (

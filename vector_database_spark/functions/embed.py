@@ -62,15 +62,6 @@ def hash_embed_one(text: str, dim: int = DEFAULT_DIM) -> list[float]:
     return [float(v) / norm for v in vals]
 
 
-def make_hash_encoder(dim: int = DEFAULT_DIM) -> Callable[[pd.Series], list[list[float]]]:
-    """Encoder constructor for the hash embedder (runs once per worker)."""
-
-    def encode(series: pd.Series) -> list[list[float]]:
-        return [hash_embed_one(str(t), dim) for t in series]
-
-    return encode
-
-
 def make_embed_udf(
     make_encoder: Callable[[], Callable[[pd.Series], list[list[float]]]] | None = None,
     dim: int = DEFAULT_DIM,
